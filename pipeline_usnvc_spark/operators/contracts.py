@@ -21,6 +21,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+class MalformedInputError(ValueError):
+    """A Python kernel met input it has no defined result for, such as
+    a null or non-finite vector component it would cast to an integer.
+    Raised in place of a silently wrong answer."""
+
+
 def contract_filter(df: DataFrame, condition: Column, message: Column) -> DataFrame:
     """Enforce ``condition`` on every row at execution time.
 

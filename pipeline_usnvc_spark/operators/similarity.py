@@ -1,22 +1,22 @@
 """Similarity search over an ``array<float>`` embedding column.
 
-Two tiers:
-  brute_force_topk — exact cosine top-k for a (small) query set:
-      broadcast the queries, one pass over the corpus, per-query
-      window top-k. The corpus never shuffles for scoring; the only
-      shuffle is the final top-k aggregation keyed by query id.
-      At 100 TB this is the "scan once, score vectorized" baseline.
-  lsh_topk — multi-table random-hyperplane LSH: vectors hash to a
-      sign-bit bucket in each of L independent tables; queries score
-      the union of their buckets. Candidate generation is an
-      equi-join on (table, bucket) — the scale path when the query
-      set is itself large. Default 16×4 measures recall@5 ≥ 0.84 on
-      the synthetic embeddings (see docstring).
+Exact paths share one certified kernel, ``_certified_cosine``: a
+numpy cosine pass over Arrow batches SELECTS candidates with a
+dimension-aware safety band, and the sequential-fold cosine of
+functions/vectors.py CERTIFIES them, so every emitted ``sim`` is the
+same IEEE double the all-pairs SQL formulation (and the DuckDB oracle)
+computes. The kernel has two modes:
+  top-k      brute_force_topk (cosine): broadcast queries, one pass
+             over the corpus, a per-query window over the candidates.
+  threshold  every same-key pair at or above a cosine threshold; the
+             key is a blocking column — the cluster label for q221,
+             the LSH (table, bucket) of embedding_near_dup_lsh.
 
-Vector math uses sequential-fold native expressions (functions/
-vectors.py): deterministic summation order, so exact oracle parity.
-The hyperplanes are derived deterministically from md5 of
-(plane, dim) — no RNG state, reproducible across engines and runs.
+Approximate paths (LSH, multi-probe LSH, IVF, PQ) generate candidates
+by equi-joins on bucket or cell ids and score them with the same
+sequential fold. The hyperplanes are derived deterministically from
+md5 of (plane, dim) — no RNG state, reproducible across engines and
+runs.
 """
 
 from __future__ import annotations
@@ -24,84 +24,163 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pipeline_usnvc_spark.functions.vectors import cosine_similarity, to_double_array
+from pipeline_usnvc_spark.functions.vectors import dot, l2_norm, to_double_array
 
 
-def _cosine_topk_candidates(q, v, k: int):
-    """(query_id, neighbor_id, v_vec) candidate rows for exact cosine
-    top-k: per Arrow batch, a numpy cosine pass keeps every vector
-    within a margin of the batch's (k+1)-th best score per query (+1:
-    the self-pair is dropped downstream) — candidates can only be
-    ADDED; the exact fold downstream decides. Soundness of the
-    margin (the q221 argument, made dimension-aware per review): both
-    the numpy cosine and the sequential fold equal the true cosine to
-    within ~dim·eps (Cauchy-Schwarz bounds Σ|a_i·b_i| ≤ |a||b|, so
-    the summation error of the dot divided by the norms is at most a
-    small multiple of dim·2.2e-16, whatever the vector magnitudes);
-    the band is max(1e-9, 64·dim·eps), orders above that divergence
-    at any dimension this engine targets. Non-finite cosines
-    (zero-norm vectors) are kept unconditionally (Spark sorts NaN
-    first under desc), and rows the kernel cannot score vectorized —
-    null or wrong-length arrays, whose exact sim is null and ranks
-    LAST — are emitted as candidates for every query so the exact
-    path reproduces the old plan's null handling bit-for-bit.
+def _certified_cosine(
+    v: DataFrame,
+    queries: DataFrame | None = None,
+    k: int = 0,
+    key: str | None = None,
+    t: float = 0.0,
+) -> DataFrame:
+    """Exact cosine search over ``v``'s ``(id, vec)`` rows, ``vec`` an
+    ``array<double>``: numpy selects, the sequential fold certifies.
 
-    NOTE: building this DataFrame collect()s the queries subtree (one
-    Spark job at construction time) — bounded by the operator
-    contract (queries are broadcast-small), the same build-time-action
-    convention as the repo's eager materialize()."""
+    top-k mode (``queries``, also ``(id, vec)``, and ``k``):
+      ``(query_id, neighbor_id, sim)`` candidates, self-pairs removed;
+      the caller ranks. Per Arrow batch and query, a vector survives
+      when its numpy score is at least the batch's (k+1)-th best finite
+      score minus the band (+1: the self-pair is dropped after). The
+      global exact top-k is a subset of the union of per-batch exact
+      top-(k+1)s, and each of those is inside its batch's band.
+      Queries are collected once at build time (bounded by the operator
+      contract: they are broadcast-small) and re-enter the plan as a
+      local relation, so ``query_id`` keeps the query frame's type and
+      the query subtree runs once.
+    threshold mode (``key``, a column of ``v``, and ``t``):
+      ``(id_a, id_b, sim)`` for every pair with equal non-null keys,
+      ``id_a < id_b`` and exact ``sim >= t`` (NaN passes, as in Spark
+      SQL). Each key group is scored as a blocked matmul, keeping pairs
+      at or above ``t`` minus the band. A pair sharing several keys is
+      emitted once per key.
+
+    Soundness of the band, ``max(1e-9, 64·dim·eps)``: the numpy cosine
+    and the sequential fold each equal the true cosine to within a
+    small multiple of dim·eps (Cauchy-Schwarz bounds Σ|a_i·b_i| by
+    |a||b|, whatever the magnitudes), so the band can only ADD
+    candidates. Rows the numpy pass cannot score and non-finite scores
+    are always candidates, so the fold decides them: NaN, an ANSI
+    DIVIDE_BY_ZERO or null, exactly as in SQL. Candidates re-emit the
+    original Arrow values (``take``), so the fold sees the exact input
+    doubles, NaN included.
+    """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    # bounded by the operator contract: queries are broadcast-small
-    q_rows = q.select("query_id", "q_vec").collect()
-    id_type = v.schema["neighbor_id"].dataType.simpleString()
-    schema = f"query_id {id_type}, neighbor_id {id_type}, v_vec array<double>"
-    if not q_rows:
-        return v.sparkSession.createDataFrame([], schema)
-    qids = [r["query_id"] for r in q_rows]
-    Qm = np.stack([np.asarray(r["q_vec"], dtype=np.float64) for r in q_rows])
-    qn = np.sqrt((Qm * Qm).sum(axis=1))
-    dim = Qm.shape[1]
-    band = max(1e-9, 64.0 * dim * np.finfo(np.float64).eps)
+    # The helpers are nested so the Arrow closures pickle by value:
+    # executors run them without importing this package.
+    def matrix(col, dim=None):
+        """(M, band) for an Arrow list<double> column: M is its
+        (rows, dim) float64 matrix, dim defaulting to the most common
+        non-null row length. A null row or a row that is not dim long
+        becomes all NaN, so its scores are non-finite and it is always
+        a candidate: the fold then gives it the null (or, between two
+        equally ragged rows, the real) similarity SQL gives. Null
+        components arrive as NaN."""
+        if dim is None:
+            lens = pc.drop_null(pc.list_value_length(col)).to_numpy()
+            dim = int(np.bincount(lens).argmax()) if len(lens) else 0
+        ok = pc.fill_null(pc.equal(pc.list_value_length(col), dim), False)
+        rows = col.filter(ok)
+        M = np.full((len(col), dim), np.nan)
+        M[ok.to_numpy(zero_copy_only=False)] = (
+            rows.flatten().to_numpy(zero_copy_only=False).reshape(len(rows), dim)
+        )
+        return M, max(1e-9, 64.0 * dim * np.finfo(np.float64).eps)
 
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            nid = pdf["neighbor_id"].to_numpy()
-            vv = pdf["v_vec"].to_numpy()
-            ok = np.array(
-                [x is not None and np.shape(x) == (dim,) for x in vv], dtype=bool
+    def cosines(A, B):
+        """Numpy cosine of every row of A with every row of B; a
+        non-finite score (zero norm, NaN or inf component, masked row)
+        becomes +inf so that every selection keeps it."""
+        with np.errstate(all="ignore"):
+            S = (A @ B.T) / np.outer(
+                np.sqrt((A * A).sum(axis=1)), np.sqrt((B * B).sum(axis=1))
             )
-            inv_idx = np.flatnonzero(~ok)
-            sel_q, sel_n, sel_v = [], [], []
-            val_idx = np.flatnonzero(ok)
-            if len(val_idx):
-                V = np.stack(vv[val_idx]).astype(np.float64)
-                vn = np.sqrt((V * V).sum(axis=1))
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    S = (V @ Qm.T) / (vn[:, None] * qn[None, :])
-                S[~np.isfinite(S)] = np.inf
-                n_ok = len(val_idx)
-                k_eff = min(k + 1, n_ok)
-                for j, qid in enumerate(qids):
-                    col = S[:, j]
-                    kth = np.partition(col, n_ok - k_eff)[n_ok - k_eff]
-                    idx = val_idx[np.flatnonzero(col >= kth - band)]
-                    sel_q.extend([qid] * len(idx))
-                    sel_n.extend(nid[idx])
-                    sel_v.extend(vv[idx])
-            if len(inv_idx):
-                for qid in qids:
-                    sel_q.extend([qid] * len(inv_idx))
-                    sel_n.extend(nid[inv_idx])
-                    sel_v.extend(vv[inv_idx])
-            yield pd.DataFrame(
-                {"query_id": sel_q, "neighbor_id": sel_n, "v_vec": sel_v}
-            )
+        S[~np.isfinite(S)] = np.inf
+        return S
 
-    return v.select("neighbor_id", "v_vec").mapInPandas(batches, schema=schema)
+    def certify(a: str, b: str, na, nb):
+        """The exact sim: the sequential-fold dot over the fold norms,
+        the IEEE sequence of the SQL formulation and the oracle."""
+        return (dot(F.col(a), F.col(b)) / (na * nb)).alias("sim")
+
+    id_type = v.schema["id"].dataType.simpleString()
+    if queries is not None:
+        # bounded by the operator contract: queries are broadcast-small
+        qt = queries.select("id", "vec").toArrow()
+        qt = qt.append_column("q_row", pa.array(np.arange(qt.num_rows), pa.int64()))
+        Q, band = matrix(qt.column("vec").combine_chunks())
+
+        def select(batches):
+            for b in batches:
+                S = cosines(matrix(b.column("vec"), Q.shape[1])[0], Q)
+                n, kth = len(S), -np.inf
+                if n > k + 1:
+                    finite = np.where(np.isinf(S), -np.inf, S)
+                    kth = np.partition(finite, n - k - 1, axis=0)[n - k - 1]
+                vi, qi = np.nonzero(S >= kth - band)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(qi, pa.int64()), b.column("id").take(vi), b.column("vec").take(vi)],
+                    names=["q_row", "neighbor_id", "v_vec"],
+                )
+
+        cand = v.select("id", "vec").mapInArrow(
+            select, f"q_row bigint, neighbor_id {id_type}, v_vec array<double>"
+        )
+        q = v.sparkSession.createDataFrame(qt).select(
+            "q_row",
+            F.col("id").alias("query_id"),
+            F.col("vec").alias("q_vec"),
+            l2_norm(F.col("vec")).alias("q_norm"),
+        )
+        return (
+            cand.join(F.broadcast(q), "q_row")
+            .filter(F.col("neighbor_id") != F.col("query_id"))
+            .select(
+                "query_id",
+                "neighbor_id",
+                certify("q_vec", "v_vec", F.col("q_norm"), l2_norm(F.col("v_vec"))),
+            )
+        )
+
+    def pairs(tbl):
+        # id order makes the positional upper triangle the id_a < id_b
+        # candidate set; blocks of 1024 rows bound memory on hot keys
+        tbl = tbl.sort_by("id")
+        M, band = matrix(tbl.column("vec").combine_chunks())
+        a, b = [], []
+        for lo in range(0, len(M), 1024):
+            ia, ib = np.nonzero(cosines(M[lo : lo + 1024], M[lo:]) >= t - band)
+            keep = ia < ib
+            a.append(ia[keep] + lo)
+            b.append(ib[keep] + lo)
+        a, b = np.concatenate(a), np.concatenate(b)
+        ids, vecs, norms = tbl.column("id"), tbl.column("vec"), tbl.column("norm")
+        return pa.table(
+            {
+                "id_a": ids.take(a), "va": vecs.take(a), "na": norms.take(a),
+                "id_b": ids.take(b), "vb": vecs.take(b), "nb": norms.take(b),
+            }
+        )
+
+    # norms fold once per row, not per candidate pair
+    cand = (
+        v.filter(F.col(key).isNotNull())
+        .withColumn("norm", l2_norm(F.col("vec")))
+        .groupBy(key)
+        .applyInArrow(
+            pairs,
+            f"id_a {id_type}, va array<double>, na double, "
+            f"id_b {id_type}, vb array<double>, nb double",
+        )
+    )
+    return (
+        cand.filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", certify("va", "vb", F.col("na"), F.col("nb")))
+        .filter(F.col("sim") >= t)
+    )
 
 
 def brute_force_topk(
@@ -118,75 +197,33 @@ def brute_force_topk(
     Deterministic tie-break on neighbor id. ``metric`` is ``cosine``
     (descending similarity) or ``l2`` (ascending squared distance,
     reported negated in ``sim`` so the rank ordering reads the same).
+    Cosine runs the certified kernel: a numpy pass over Arrow batches
+    of the corpus nominates candidates and only those pay the exact
+    sequential fold, whose value is the ``sim`` ranked and returned.
     """
-    # Norms are bound per ROW (one fold per query / per vector) instead
-    # of inside the per-pair cosine, which re-evaluated both norm folds
-    # for every (query, vector) pair — 3 interpreted HOF folds per pair
-    # down to 1 (the dot). Bit-identical: the per-row fold is the same
-    # sequential expression over the same array, and the final
-    # dot/(qn*vn) tree is unchanged (measured q60 1.15 s -> 0.75 s at
-    # sf0.1, hash-identical result).
-    from pipeline_usnvc_spark.functions.vectors import dot, l2_norm
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), to_double_array(vec_col).alias("q_vec")
-    ).withColumn("_qn", l2_norm(F.col("q_vec")))
-    # NOTE: deliberately NOT fan_out here — measured 2x slower at test
-    # scale (2k vectors): the broadcast-join scoring is cheaper than
-    # the extra round-robin exchange; the window top-k repartitions
-    # anyway. Revisit only for corpora large enough to out-scale their
-    # row-group count, where the scan itself yields many partitions.
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"), to_double_array(vec_col).alias("v_vec")
-    ).withColumn("_vn", l2_norm(F.col("v_vec")))
     if metric == "cosine":
-        # r14 (the q221 pattern, guide §4.2): the all-pairs interpreted
-        # dot fold cost |queries| x |vectors| x dim interpreted ops in
-        # whatever parallelism the scan yields (x10 probe: 24 s, ONE
-        # task). A float64 BLAS pass now nominates per-batch candidates
-        # — every vector whose numpy cosine is within 1e-9 of the
-        # batch's k-th best per query (numpy and the sequential fold
-        # agree to ~1e-13 for 64-dim inputs, so the band can only ADD
-        # candidates; non-finite scores rank as +inf, matching Spark's
-        # NaN-sorts-first-under-desc) — and only the survivors pay the
-        # exact sequential fold, whose value feeds the final rank
-        # exactly as before. Top-k soundness per query: the global
-        # exact top-k is a subset of the union of per-batch exact
-        # top-(k+1) (the +1 absorbs the self-pair dropped below), each
-        # of which is inside its batch's band. Vectors round-trip
-        # Arrow as float64 (bit-exact), so the re-scored fold sees the
-        # identical doubles.
-        candidates = _cosine_topk_candidates(q, v, k)
-        scored = (
-            candidates.join(F.broadcast(q), "query_id")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                (
-                    dot(F.col("q_vec"), F.col("v_vec"))
-                    / (F.col("_qn") * l2_norm(F.col("v_vec")))
-                ).alias("sim"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "sim")
+        scored = _certified_cosine(
+            vectors.select(F.col(id_col).alias("id"), to_double_array(vec_col).alias("vec")),
+            queries.select(F.col(id_col).alias("id"), to_double_array(vec_col).alias("vec")),
+            k=k,
         )
     elif metric == "l2":
+        q = queries.select(
+            F.col(id_col).alias("query_id"), to_double_array(vec_col).alias("q_vec")
+        )
+        v = vectors.select(
+            F.col(id_col).alias("neighbor_id"), to_double_array(vec_col).alias("v_vec")
+        )
         score = -F.aggregate(
             F.zip_with(F.col("q_vec"), F.col("v_vec"), lambda a, b: (a - b) * (a - b)),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
+        scored = v.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
+            "query_id", "neighbor_id", score.alias("sim")
+        )
     else:
         raise ValueError(f"unknown metric {metric!r}")
-    scored = (
-        v.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", score.alias("sim"))
-    )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -642,8 +679,8 @@ def _table_bucket_ids(
     """(id, tb=(table, bucket)) exploded across ``n_tables``
     independent hash tables, computed as ONE ``Q @ C.T`` integer
     matmul per Arrow batch inside mapInPandas. SLIM by design — only
-    the id and a 2-int struct ride the ×n_tables explode; vectors are
-    joined back after candidate dedup.
+    the id and a 2-int struct ride the ×n_tables explode; callers join
+    the vectors they need. A null or wrong-length vector gets no bucket.
 
     The earlier native formulation (n_tables·n_planes literal-array
     fold expressions) spent ~10 s on 500 rows at 24×4 — Catalyst
@@ -685,7 +722,9 @@ def _table_bucket_ids(
                 }
             )
 
-    flat = df.select(F.col(id_col), to_double_array(vec_col).alias("_v"))
+    flat = df.select(F.col(id_col), to_double_array(vec_col).alias("_v")).filter(
+        F.size("_v") == dim
+    )
     id_type = flat.schema[id_col].dataType.simpleString()
     out = flat.mapInPandas(batches, schema=f"{id_col} {id_type}, t int, b bigint")
     return out.select(id_col, F.struct("t", "b").alias("tb"))
@@ -774,171 +813,15 @@ def embedding_near_dup_lsh(
     (sim ≥ 0.4, p ≈ 0.63) measured recall vs the exact all-pairs
     sweep is 0.92 with 16 tables and 1.00 with 24, zero false
     positives (verify is exact) — tests/test_multimodal.py.
-    Candidate generation is an equi-join on (table, bucket) over
-    SLIM rows; the corpus never cross-joins.
+    Each (table, bucket) is one block of the certified kernel's
+    threshold mode, so within a bucket the result is the SQL pair
+    sweep's; the corpus never cross-joins. A null or wrong-length
+    vector gets no bucket (``_table_bucket_ids``).
     """
-    import numpy as np
-    import pandas as pd
-
-    b = _table_bucket_ids(vectors, n_tables, n_planes, dim, id_col, vec_col)
-    ba, bb = b.alias("ba"), b.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.tb") == F.col("bb.tb"))
-            & (F.col(f"ba.{id_col}") < F.col(f"bb.{id_col}")),
-        )
-        .select(
-            F.col(f"ba.{id_col}").alias("id_a"), F.col(f"bb.{id_col}").alias("id_b")
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    id_type = vectors.schema[id_col].dataType.simpleString()
-    v = vectors.select(F.col(id_col), to_double_array(vec_col).alias("v"))
-    va = v.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"))
-    vb = v.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"))
-    paired = cand.join(va, "id_a").join(vb, "id_b")
-
-    # BLAS pre-filters, the JVM fold certifies (the q66 discipline,
-    # extended here in round 13 so q164 is hash-oracle-able): one
-    # vectorized cosine per Arrow batch discards the candidate bulk
-    # at (threshold - 1e-9) — numpy's pairwise summation and the
-    # sequential fold agree to ~1e-13 on 64-dim vectors, so the
-    # margin can never drop a fold-passing pair — then the survivors
-    # (near-dup grain, tiny) are re-scored with the deterministic
-    # JVM-side sequential fold and the EXACT threshold applies to the
-    # fold value: the emitted (pair, sim) set is the same IEEE
-    # sequence a SQL engine computes.
-    pre = threshold - 1e-9
-
-    def prefilter(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            A = np.stack(pdf["va"].to_numpy()).astype(np.float64)
-            B = np.stack(pdf["vb"].to_numpy()).astype(np.float64)
-            sims = (A * B).sum(axis=1) / (
-                np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-            )
-            keep = sims >= pre
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"].to_numpy()[keep],
-                    "id_b": pdf["id_b"].to_numpy()[keep],
-                }
-            )
-
-    survivors = paired.mapInPandas(
-        prefilter, schema=f"id_a {id_type}, id_b {id_type}"
-    )
-    return (
-        survivors.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            cosine_similarity(F.col("va"), F.col("vb")).alias("sim"),
-        )
-        .filter(F.col("sim") >= threshold)
-    )
-
-
-def batched_cosine_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-batched exact cosine top-k: (query_id, neighbor_id, rank, sim).
-
-    BLAS selects, the JVM fold certifies. The (small) query set ships
-    to executors as a broadcast numpy matrix, and each Arrow batch of
-    the corpus is scored in one ``V @ Q.T`` matmul inside
-    ``mapInPandas`` — ~100x fewer Python ops than per-row evaluation.
-    Each batch emits only a LOCAL candidate slate of 2k neighbors per
-    query (a map-side reduction: 2k rows per query per partition cross
-    the shuffle, not the corpus), carrying the neighbor's double-cast
-    vector so no second corpus scan is needed. The final ``sim`` is
-    then RECOMPUTED on the candidate slate with the deterministic
-    JVM-side sequential fold (``functions/vectors.cosine_similarity``
-    — the identical IEEE sequence as ``brute_force_topk`` and the
-    DuckDB oracle), and the global top-k ranks on those fold values.
-    Result: bit-exact fold semantics at BLAS throughput.
-
-    Why 2k local candidates: BLAS pairwise summation and the
-    sequential fold differ by at most a few ulps, so the fold top-k
-    can escape the BLAS local top-2k only if k+1 distinct similarities
-    sit within ulps of each other inside one partition — not a real
-    risk for continuous embeddings, and the driver's hash-compare
-    against the exact oracle re-certifies it every run.
-    """
-    import numpy as np
-    import pandas as pd
-
-    id_type = vectors.schema[id_col].dataType.simpleString()
-    # bounded: the eval query set is driver-sized by contract
-    q_pdf = queries.select(F.col(id_col), to_double_array(vec_col).alias("qv")).toPandas()
-    if len(q_pdf) == 0:
-        raise ValueError("query set is empty")
-    q_ids = q_pdf[id_col].to_numpy()
-    Q = np.stack(q_pdf["qv"].to_numpy()).astype(np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    bc = vectors.sparkSession.sparkContext.broadcast((q_ids, Qn.T.copy()))
-    n_local = 2 * k
-
-    def score(batches):
-        q_ids_l, QnT = bc.value
-        m = len(q_ids_l)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            S = Vn @ QnT  # raw BLAS scores: selection only, never emitted
-            # raw id values as keys (no int() coercion): the id
-            # column is generic — string ids would crash int(), and
-            # truncating coercions could miss the self-exclusion
-            row_of = {i: r for r, i in enumerate(ids)}
-            out_q, out_n, out_v = [], [], []
-            for j in range(m):
-                col = S[:, j].copy()
-                self_row = row_of.get(q_ids_l[j])
-                if self_row is not None:
-                    col[self_row] = -np.inf
-                # lexsort: last key is primary -> (-sim, id) asc == sim desc, id asc
-                order = np.lexsort((ids, -col))[:n_local]
-                order = order[np.isfinite(col[order])]
-                out_q.append(np.full(len(order), q_ids_l[j]))
-                out_n.append(ids[order])
-                out_v.extend(list(V[order]))
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "nv": out_v,
-                }
-            )
-
-    candidates = vectors.select(id_col, vec_col).mapInPandas(
-        score, f"query_id {id_type}, neighbor_id {id_type}, nv array<double>"
-    )
-    # query-grain broadcast join attaches qe; sim is the exact fold
-    qe = queries.select(
-        F.col(id_col).alias("query_id"), to_double_array(vec_col).alias("qe")
-    )
-    from pipeline_usnvc_spark.functions.vectors import cosine_similarity
-
-    exact = candidates.join(F.broadcast(qe), "query_id").withColumn(
-        "sim", cosine_similarity(F.col("qe"), F.col("nv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    buckets = _table_bucket_ids(vectors, n_tables, n_planes, dim, id_col, vec_col)
+    v = vectors.select(F.col(id_col).alias("id"), to_double_array(vec_col).alias("vec"))
+    blocked = buckets.select(F.col(id_col).alias("id"), "tb").join(v, "id")
+    return _certified_cosine(blocked, key="tb", t=threshold).dropDuplicates(["id_a", "id_b"])
 
 
 def gram_matrix_quantized(

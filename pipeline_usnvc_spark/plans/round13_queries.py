@@ -1092,7 +1092,22 @@ def q437_integer_kmeans_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             for pdf in it:
                 if not len(pdf):
                     continue
-                Q = np.stack(pdf["q"].to_numpy()).astype(np.int64)
+                # a null, ragged or null-component row has no defined
+                # assignment; casting its NaN to int64 would be garbage
+                Q = np.stack(
+                    [
+                        r if r is not None and len(r) == C.shape[1] else np.full(C.shape[1], np.nan)
+                        for r in pdf["q"].to_numpy()
+                    ]
+                ).astype(np.float64)
+                if not np.isfinite(Q).all():
+                    from pipeline_usnvc_spark.operators.contracts import MalformedInputError
+
+                    raise MalformedInputError(
+                        "k-means Lloyd pass: a quantized embedding is null, ragged "
+                        "or has a null component"
+                    )
+                Q = Q.astype(np.int64)
                 ids = pdf["vec_id"].to_numpy()
                 qn2 = (Q * Q).sum(axis=1)
                 dists = qn2[:, None] - 2 * (Q @ C.T) + cn2[None, :]

@@ -34,9 +34,7 @@ _COS = f"({_DOT.format(a='qe', b='ve')} / ({_NORM.format(v='qe')} * {_NORM.forma
 # ---------------------------------------------------------------------------
 # q60 — exact cosine top-5 for the query subset vec_id % 100 == 0.
 # ---------------------------------------------------------------------------
-@query(
-    "q60_cosine_topk",
-    oracle=f"""
+_COSINE_TOP5_ORACLE = f"""
     WITH v AS (
         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
         FROM embeddings
@@ -52,8 +50,10 @@ _COS = f"({_DOT.format(a='qe', b='ve')} / ({_NORM.format(v='qe')} * {_NORM.forma
         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
         FROM scored
     ) WHERE rank <= 5
-    """,
-)
+    """
+
+
+@query("q60_cosine_topk", oracle=_COSINE_TOP5_ORACLE)
 def q60_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
@@ -393,39 +393,11 @@ def q65_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q66 — Arrow-batched exact cosine top-k: the BLAS scale path for the
-# same answer as q60. BLAS only SELECTS (a padded 2k-per-partition
-# candidate slate); the emitted sim is recomputed with the JVM
-# sequential fold — the identical IEEE sequence as q60 and this
-# oracle — so the compare is bit-exact with no rounding grid to
-# straddle (numpy banker's-rounding vs DuckDB half-away never enters).
+# q66 — q60 under its second registry name: the Arrow-batched top-k is
+# the certified kernel brute_force_topk runs, so both names replay the
+# same plan against the same oracle.
 # ---------------------------------------------------------------------------
-@query(
-    "q66_cosine_topk_arrow",
-    oracle=f"""
-    WITH v AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-        FROM embeddings
-    ),
-    q AS (SELECT vec_id AS query_id, ve AS qe FROM v WHERE vec_id % 100 = 0),
-    scored AS (
-        SELECT q.query_id, v.vec_id AS neighbor_id, {_COS} AS sim
-        FROM v CROSS JOIN q
-        WHERE v.vec_id <> q.query_id
-    )
-    SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, sim
-    FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM scored
-    ) WHERE rank <= 5
-    """,
-)
-def q66_cosine_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pipeline_usnvc_spark.operators.similarity import batched_cosine_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    return batched_cosine_topk(emb, queries, k=5)
+query("q66_cosine_topk_arrow", oracle=_COSINE_TOP5_ORACLE)(q60_cosine_topk)
 
 
 # ---------------------------------------------------------------------------
@@ -598,9 +570,9 @@ def _q164_oracle() -> str:
 # q164 — embedding near-duplicates WITHOUT a blocking key: multi-table
 # LSH candidate blocking + exact cosine verify. HASH-GREEN since round
 # 13 (VERDICT r12 item 1): the integer-exact bucket bits
-# (lsh_buckets_sql twin), the fold-certified verify (BLAS pre-filters
-# at threshold-1e-9, the JVM sequential fold decides — the q66
-# discipline), and the vector-grain audit reshape are all
+# (lsh_buckets_sql twin), the fold-certified verify (the certified
+# kernel's threshold mode, one block per (table, bucket)), and the
+# vector-grain audit reshape are all
 # SQL-expressible, so the DuckDB oracle certifies the candidate set,
 # the verified pairs, AND the measured pair recall end-to-end.
 # Threshold 0.4 is the synthetic corpus's near-dup band (its max
@@ -1204,80 +1176,22 @@ def q196_dim_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q221_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    from pipeline_usnvc_spark.functions.vectors import dot, l2_norm
+    from pipeline_usnvc_spark.operators.similarity import _certified_cosine
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", to_double_array("embedding").alias("ve")
     )
-    # BLAS pre-filters, the JVM fold certifies (the q66/q164
-    # discipline, applied r13 — the within-label pair sweep previously
-    # evaluated 3 interpreted HOF folds PER PAIR in the join filter,
-    # ~200k pairs x 192 lambda steps at sf0.1): each label group is
-    # scored in ONE blocked matmul (block x |group| sims at a time, so
-    # memory stays bounded on a hot cluster) at threshold - 1e-9 —
-    # numpy pairwise summation and the sequential fold agree to ~1e-13
-    # on 64-dim vectors, so the margin can never drop a fold-passing
-    # pair — and the surviving candidates (near-dup grain, tiny) are
-    # re-scored with the deterministic JVM-side sequential fold with
-    # the EXACT threshold on the fold value: the emitted pair set is
-    # the same IEEE sequence the SQL oracle computes. Group shuffle
-    # moves each vector ONCE (vs twice for the former self-join).
-    # Null labels pair with nothing (the join-on-equality semantics),
-    # so they are filtered before the grouping.
-    pre = 0.4 - 1e-9
-    id_type = emb.schema["vec_id"].dataType.simpleString()
-
-    def group_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id")
-        ids = pdf["vec_id"].to_numpy()
-        M = np.stack(pdf["ve"].to_numpy()).astype(np.float64)
-        nrm = np.linalg.norm(M, axis=1)
-        out_a: list = []
-        out_b: list = []
-        blk = 1024
-        with np.errstate(divide="ignore", invalid="ignore"):
-            for lo in range(0, len(ids), blk):
-                s = (M[lo : lo + blk] @ M.T) / (
-                    nrm[lo : lo + blk, None] * nrm[None, :]
-                )
-                ia, ib = np.nonzero(s >= pre)
-                # strict upper triangle in vec_id order (ids sorted, so
-                # position order IS id order) = the a.vec_id < b.vec_id
-                # candidate discipline; diagonal self-pairs drop here
-                keep = (ia + lo) < ib
-                out_a.append(ids[ia[keep] + lo])
-                out_b.append(ids[ib[keep]])
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-            }
-        )
-
-    cand = (
-        emb.filter(F.col("label").isNotNull())
-        .groupBy("label")
-        .applyInPandas(group_pairs, f"id_a {id_type}, id_b {id_type}")
-    )
-    nemb = emb.withColumn("nrm", l2_norm(F.col("ve")))
-    va = nemb.select(
-        F.col("vec_id").alias("id_a"), F.col("ve").alias("va"), F.col("nrm").alias("na")
-    )
-    vb = nemb.select(
-        F.col("vec_id").alias("id_b"), F.col("ve").alias("vb"), F.col("nrm").alias("nb")
-    )
-    pairs = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        # per-row norms bound once; dot/(na*nb) is the identical IEEE
-        # tree cosine_similarity built per pair
-        .withColumn("sim", dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")))
-        .filter(F.col("sim") >= 0.4)
-        .select("id_a", "id_b")
-    )
+    # The certified kernel's threshold mode with the label as block
+    # key: each label group is scored in one blocked matmul and only
+    # the banded survivors (near-dup grain) pay the sequential fold, so
+    # the pair set is the SQL join's, NaN pairs and DIVIDE_BY_ZERO
+    # included. The group shuffle moves each vector once; null labels
+    # pair with nothing, as in the equality join.
+    pairs = _certified_cosine(
+        emb.select(F.col("vec_id").alias("id"), F.col("ve").alias("vec"), "label"),
+        key="label",
+        t=0.4,
+    ).select("id_a", "id_b")
     # pairs feeds BOTH audit frames below — materialize once or the
     # label-partitioned scoring (the expensive stage) runs twice.
     from pipeline_usnvc_spark.operators.checkpoint import materialize

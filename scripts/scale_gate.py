@@ -1,8 +1,7 @@
 #!/usr/bin/env python
-"""Unified scale gate (VERDICT r12 item 5): one command, one
-artifact. Folds the ad-hoc scale_round{8,9,10,10b,10c,12}.py stress
-harnesses into PINNED multipliers over the standing families and
-emits ONE JSON line to SCALE_r{N}.json next to the BENCH artifacts:
+"""Unified scale gate: one command, one artifact. Runs PINNED
+multipliers over the standing families and emits ONE JSON line to
+SCALE_r{N}.json next to the BENCH artifacts:
 
   - ledger_fold      1x/10x/100x  q427 shuffled fold vs q431's
                                   bucketed fold-only (outputs
@@ -49,8 +48,8 @@ CURVE_MULTS = (1, 10)
 
 
 def snapshot_diff_fold(oplog):
-    """q428's snapshot-isolation diff fold (the scale_round12 inline,
-    so the head-to-head can feed it either the raw or bucketed log)."""
+    """q428's snapshot-isolation diff fold, inlined so the
+    head-to-head can feed it either the raw or the bucketed log."""
     from pyspark.sql import functions as F
 
     per_key = oplog.groupBy("fp").agg(

@@ -267,3 +267,16 @@ def test_doc_registry_counts_match_code():
     # every registered query name appears somewhere in the COVERAGE index
     missing = [n for n in QUERIES if n not in coverage]
     assert not missing, f"queries absent from COVERAGE.md appendix: {missing[:5]}"
+
+
+def test_scripts_hold_no_round_named_harness():
+    """Superseded per-round harness scripts must not pile up in
+    scripts/: a standing tool gets a descriptive name, and a one-off
+    probe is deleted once its result is recorded."""
+    import re
+    from pathlib import Path
+
+    scripts = Path(__file__).resolve().parent.parent / "scripts"
+    pattern = re.compile(r"^scale_round|_r\d+\.py$|^ab_r\d+_")
+    named = sorted(p.name for p in scripts.iterdir() if pattern.search(p.name))
+    assert not named, f"round-named scripts in scripts/: {named}"

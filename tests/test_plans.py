@@ -63,17 +63,18 @@ def test_asof_join_single_shuffle(spark, sf_dir):
 
 
 def test_arrow_topk_partial_reduction(spark, sf_dir):
-    # q66: the matmul scorer consumes the scan DIRECTLY (no exchange
-    # below it — the corpus never shuffles for scoring), the exact-fold
-    # qe side re-attaches through a BROADCAST hash join (query-grain),
-    # and Spark adds a Partial WindowGroupLimit before the single merge
-    # exchange, so only local candidate rows cross the wire.
+    # q66: the matmul scorer consumes the scan DIRECTLY (only the
+    # to-double cast Project below it, no exchange — the corpus never
+    # shuffles for scoring), the exact-fold query side re-attaches
+    # through a BROADCAST hash join (query-grain), and Spark adds a
+    # Partial WindowGroupLimit before the single merge exchange, so
+    # only local candidate rows cross the wire.
     import re
 
     plan = _plan(spark, "q66_cosine_topk_arrow", sf_dir)
-    assert re.search(r"MapInPandas \(\d+\)\s*\n[:\s]*\+- Scan parquet", plan), (
-        "corpus shuffled before scoring"
-    )
+    assert re.search(
+        r"MapInArrow \(\d+\)\s*\n[:\s]*\+- Project \(\d+\)\s*\n[:\s]*\+- Scan parquet", plan
+    ), "corpus shuffled before scoring"
     assert "BroadcastHashJoin" in plan, "qe re-attach fell out of broadcast"
     assert "row_number(), 5, Partial" in plan, "partial top-k pushdown missing"
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1

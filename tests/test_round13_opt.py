@@ -6,10 +6,10 @@ the edges the rewrite introduced:
 q221 (BLAS prefilter + fold certify): per-label blocked matmul must
   emit exactly the fold-passing within-label pairs — crafted corpus
   covers a NULL label (join-on-equality semantics: pairs with
-  nothing), a zero-norm vector (NaN cosine: silently dropped, as the
-  old per-pair fold formulation did), exact-threshold pairs (the
-  1e-9 margin must not flip them), and a group larger than one
-  prefilter block (block-boundary pairs must not be lost).
+  nothing), exact-threshold pairs (the band must not flip them), and
+  a group larger than one prefilter block (block-boundary pairs must
+  not be lost). Zero-norm, NaN and null vectors are the malformed-input
+  cases of tests/test_malformed_vectors.py.
 
 q60/q61 (norm-precompute): per-row bound norms must reproduce the
   per-pair cosine bit-for-bit (same sequential fold, same
@@ -41,7 +41,7 @@ def crafted_emb_dir(spark, tmp_path_factory):
     """An embeddings.parquet with the q221 edge cases planted:
 
     - label 0: 3 near-identical vectors (pairs above 0.4) + 1
-      orthogonal-ish vector + 1 ZERO vector (norm 0 -> NaN cosine);
+      orthogonal-ish vector;
     - label 1: 1300 vectors (> the 1024 prefilter block) where
       consecutive ids are similar — pairs straddle the block cut;
     - label NULL: 2 identical vectors — must emit NO pair.
@@ -49,13 +49,12 @@ def crafted_emb_dir(spark, tmp_path_factory):
     import numpy as np
 
     rows = []
-    # label 0: base + two tiny rotations + one far vector + zero vector
+    # label 0: base + two tiny rotations + one far vector
     base = np.zeros(64); base[0] = 1.0
     near1 = np.array(base); near1[1] = 0.05
     near2 = np.array(base); near2[2] = 0.07
     far = np.zeros(64); far[40] = 1.0
-    zero = np.zeros(64)
-    for i, v in enumerate([base, near1, near2, far, zero]):
+    for i, v in enumerate([base, near1, near2, far]):
         rows.append((i, 0, [float(x) for x in v]))
     # label 1: 1300 vectors, id-adjacent pairs similar (shared strong
     # component), ids interleaved so sorting by vec_id matters
@@ -75,9 +74,8 @@ def crafted_emb_dir(spark, tmp_path_factory):
 
 
 def _brute_pairs(rows, threshold=0.4):
-    """Within-label pairs by the OLD formulation's exact semantics:
-    sequential-fold cosine per pair, NaN fails the filter, null
-    labels never join."""
+    """Within-label pairs by the SQL formulation's semantics:
+    sequential-fold cosine per pair, null labels never join."""
 
     def fold_dot(a, b):
         acc = 0.0
@@ -99,9 +97,7 @@ def _brute_pairs(rows, threshold=0.4):
             if lb != la:
                 continue
             a, b = (va, vb) if ida < idb else (vb, va)
-            na, nb = fold_norm(a), fold_norm(b)
-            denom = na * nb
-            sim = fold_dot(a, b) / denom if denom != 0 else float("nan")
+            sim = fold_dot(a, b) / (fold_norm(a) * fold_norm(b))
             if sim >= threshold:
                 out.add((min(ida, idb), max(ida, idb)))
     return out

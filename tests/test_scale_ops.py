@@ -636,7 +636,7 @@ def test_operator_review_fixes(spark, sf_dir):
     from pipeline_usnvc_spark.operators.diff import table_diff
     from pipeline_usnvc_spark.operators.graph import connected_components
     from pipeline_usnvc_spark.operators.similarity import (
-        batched_cosine_topk,
+        brute_force_topk,
         kmeans_centroids,
     )
     from pipeline_usnvc_spark.sources.tables import load_table
@@ -689,12 +689,12 @@ def test_operator_review_fixes(spark, sf_dir):
     d = {r["id"]: r["change"] for r in table_diff(old_t, new_t, ["id"]).collect()}
     assert d == {1: "removed", 3: "added"}
 
-    # batched top-k with STRING ids (schema was hardcoded bigint)
+    # cosine top-k with STRING ids: the kernel must not assume bigint
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.concat(F.lit("v"), F.col("vec_id").cast("string")).alias("vec_id"), "embedding"
     )
     qs = emb.limit(3)
-    rows = batched_cosine_topk(emb, qs, k=2).collect()
+    rows = brute_force_topk(emb, qs, k=2).collect()
     assert rows and all(isinstance(r["query_id"], str) for r in rows)
     assert all(r["query_id"] != r["neighbor_id"] for r in rows)  # self excluded
 
