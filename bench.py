@@ -105,6 +105,38 @@ EXTENDED = [
 ]
 
 
+def _rounds(pattern: str) -> list[Path]:
+    """Round artifacts matching ``pattern``, oldest round first. Variant
+    runs such as BENCH_r13_c8.json (the low-core scaling probe) have a
+    stem suffix that is not an int: they are not prior-round baselines."""
+    return sorted(
+        (p for p in REPO.glob(pattern) if p.stem.split("_r")[-1].isdigit()),
+        key=lambda p: int(p.stem.split("_r")[-1]),
+    )
+
+
+def _prior(baselines: list[Path], sf_val: float | str) -> tuple[str | None, dict[str, float]]:
+    """(artifact stem, per-query seconds) of the newest recorded bench
+    at this scale factor: the ``parsed`` payload of a recorded round
+    (BENCH_rNN.json), else the newest locally written payload
+    (BENCH_LOCAL_rNN.json), which is the printed line in full."""
+    for artifact, key in [(p, "parsed") for p in reversed(baselines)] + [
+        (p, None) for p in reversed(_rounds("BENCH_LOCAL_r*.json"))
+    ]:
+        try:
+            raw = json.loads(artifact.read_text())
+        except (json.JSONDecodeError, OSError):
+            continue
+        prev = raw.get(key) if key else raw
+        if isinstance(prev, dict) and prev.get("sf") == sf_val:
+            return artifact.stem, {
+                k: float(v)
+                for part in ("queries", "queries_extended")
+                for k, v in prev.get(part, {}).items()
+            }
+    return None, {}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
@@ -140,106 +172,8 @@ def main() -> None:
         sf_val = sf
 
     # Prior-round per-query baselines (for adaptive retry below).
-    prior: dict[str, float] = {}
-    # Only plain-round artifacts: the driver also records variant runs
-    # like BENCH_r13_c8.json (the low-core scaling probe), whose stem
-    # suffix is not an int — those are not prior-round baselines.
-    baselines = sorted(
-        (p for p in REPO.glob("BENCH_r*.json") if p.stem.split("_r")[-1].isdigit()),
-        key=lambda p: int(p.stem.split("_r")[-1]),
-    )
-    baseline_round = None
-    # Newest artifact first; fall back through older rounds. A driver
-    # artifact may carry `parsed: null` with the JSON line only in its
-    # raw `tail` (BENCH_r06.json did) — parse the tail in that case.
-    for artifact in reversed(baselines):
-        try:
-            raw = json.loads(artifact.read_text())
-        except (json.JSONDecodeError, OSError):
-            continue
-        prev = raw.get("parsed")
-        if prev is None:
-            for line in reversed(str(raw.get("tail", "")).splitlines()):
-                line = line.strip()
-                if line.startswith("{"):
-                    try:
-                        prev = json.loads(line)
-                    except json.JSONDecodeError:
-                        pass
-                    break
-        if prev is None:
-            # FRONT-truncated tail (r07/r09/r10): the line lost its
-            # head but — with the tail-ordered payload — still carries
-            # `"queries": {...} ... "value": ...}`. Reconstruct from
-            # the first surviving top-level key of interest.
-            tail = str(raw.get("tail", ""))
-            for key in ('"queries_extended"', '"queries"', '"sf"'):
-                idx = tail.find(key)
-                if idx >= 0:
-                    seg = tail[idx:].strip().splitlines()[0].strip()
-                    try:
-                        prev = json.loads("{" + seg)
-                    except json.JSONDecodeError:
-                        continue
-                    break
-        if isinstance(prev, dict) and prev.get("sf") == sf_val:
-            baseline_round = artifact.stem
-            prior = {
-                k: float(v)
-                for part in ("queries", "queries_extended")
-                for k, v in prev.get(part, {}).items()
-            }
-            # Flat `"qNNN_name": 1.234` pairs that survive in the raw
-            # tail are unambiguous — regex-salvage them as a UNION
-            # with whatever structured maps parsed (a surviving
-            # queries_extended map must not suppress recovery of the
-            # main-suite timings also visible in the tail — round-11
-            # review finding), excising the `spread` map first (same
-            # query names, relative-spread values — flat map, so its
-            # region ends at the first `}` after the key).
-            import re
-
-            blob = str(raw.get("tail", ""))
-            spr = blob.find('"spread"')
-            # The 10 ms plausibility floor guards ONLY the truncated-
-            # old-format salvage below, where surviving bare pairs may
-            # be spread RATIOS; a well-formed artifact whose spread map
-            # was cleanly excised holds genuine timings, and silently
-            # dropping a sub-10ms one would blind regression flagging
-            # for that query (ADVICE r12).
-            floor = 0.0
-            if spr >= 0:
-                end = blob.find("}", spr)
-                blob = blob[:spr] + (blob[end + 1 :] if end >= 0 else "")
-            else:
-                # Old-format artifact (r09/r10: spread FOLLOWS the
-                # queries maps) whose front-truncation landed inside
-                # the spread map: the '"spread"' key is gone, so the
-                # excision above can't fire and the surviving bare
-                # "qNNN": 0.0x pairs are SPREAD RATIOS, not timings —
-                # salvaging them as priors flags bogus regressions
-                # (e.g. 1.8 s vs a 0.04 "prior"; ADVICE r11). Only
-                # salvage from a region known to hold timings: after a
-                # surviving '"queries' key fragment if one exists,
-                # else nothing.
-                q_idx = blob.find('"queries')
-                blob = blob[q_idx:] if q_idx >= 0 else ""
-                # no real query times under 10 ms on this box;
-                # sub-floor values here are spread ratios that leaked
-                # past the region cut
-                floor = 0.01
-            for m in re.finditer(
-                r'"((?:q\d+_|flagship_)\w+)":\s*(\d+(?:\.\d+)?)', blob
-            ):
-                if float(m.group(2)) >= floor:
-                    prior.setdefault(m.group(1), float(m.group(2)))
-                else:
-                    print(
-                        f"# prior discarded as implausible: {m.group(1)}="
-                        f"{m.group(2)} (old-format spread-region salvage)",
-                        file=sys.stderr,
-                    )
-            break
+    baselines = _rounds("BENCH_r*.json")
+    baseline_round, prior = _prior(baselines, sf_val)
 
     def timed(build, old: float | None) -> tuple[float, float]:
         # Repeat/median protocol (VERDICT r05 item 3): the r05 headline

@@ -2,28 +2,40 @@
 
 The reference walks an adjacency list (``unit.parent_id`` →
 ``element_global_id``) one row at a time with O(depth) lookups per
-unit (reference usnvc/usnvc.py:500-530). The set-based equivalent is a
-frontier-expansion loop: each round joins the current ancestor
-frontier back to the edge table, extending every node's chain by one
-level simultaneously — O(depth) *joins total*, not per row.
+unit (reference usnvc/usnvc.py:500-530). The set-based equivalent is
+pointer doubling over the whole closure: round r joins the closure
+rows at exactly depth ``span = 2^r`` back to the closure, extending
+every node's chain from ``span`` to ``2·span`` levels at once —
+O(log depth) joins in total, not per row (3 rounds for USNVC's 8-level
+tree, where a one-level-per-round frontier needs 7).
 
 Scale notes:
-  - Each round is one shuffle on the join key; depth is bounded (8 for
-    USNVC, configurable here) so the plan is a short chain.
-  - per-round eager checkpoints truncate lineage so 100+-round graphs don't
-    build unbounded plans (uses localCheckpoint; on a cluster with a
-    checkpoint dir, ``reliable=True``).
+  - Each round is one shuffle join plus one eager checkpoint of the
+    grown closure. Lineage is cut every round, so the plan never grows
+    with depth (uses localCheckpoint; on a cluster with a checkpoint
+    dir, the reliable path — see ``operators/checkpoint.py``).
+  - Termination is observed, not probed: an ``Observation`` records the
+    maximum depth during each round's checkpoint job, and the loop stops
+    once no chain reached the round's new reach ``2·span``.
   - Cycle safety: a cycle in the edges would loop forever in the
-    reference; here ``max_depth`` bounds the loop and rounds that stop
-    producing new rows terminate early (fixpoint).
+    reference; here ``max_depth`` caps the depths kept, and with it the
+    rounds (5 for the default 32).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from pipeline_usnvc_spark.operators.checkpoint import materialize
+
+
+def _checkpoint_max_depth(df: DataFrame) -> tuple[DataFrame, int | None]:
+    """Materialize ``df`` and return it with its maximum ``depth``
+    (None when empty), observed during the checkpoint job itself."""
+    obs = Observation()
+    df = materialize(df.observe(obs, F.max("depth").alias("max_depth")))
+    return df, obs.get["max_depth"]
 
 
 def ancestors(
@@ -31,7 +43,6 @@ def ancestors(
     id_col: str = "id",
     parent_col: str = "parent_id",
     max_depth: int = 32,
-    materialize_edges: bool = True,
 ) -> DataFrame:
     """Transitive-closure ancestor table.
 
@@ -39,47 +50,38 @@ def ancestors(
     Output: ``(id, ancestor_id, depth)`` — depth 1 is the immediate
     parent; ordering nearest-first is recoverable by sorting on depth
     (reference parity: usnvc.py:508-515 accumulates nearest-first).
-
-    ``materialize_edges`` localCheckpoints the projected edge table
-    once so the per-round self-joins reuse it instead of re-running
-    the upstream plan each round (measured ~2x on the closure; the
-    standard iterative-algorithm pattern, same reasoning as GraphX).
+    One row per path of length 1..``max_depth``; a path of length L in
+    ``(span, 2·span]`` splits in exactly one way into its first
+    ``span`` steps plus the rest, so every path is produced once, in
+    trees and in cycles alike.
     """
-    edges = edges.select(F.col(id_col).alias("id"), F.col(parent_col).alias("parent_id"))
-    if materialize_edges:
-        edges = edges.transform(materialize)
-    # Frontier: (id, ancestor_id) pairs discovered at the current depth.
-    frontier = edges.filter(F.col("parent_id").isNotNull()).select(
-        "id", F.col("parent_id").alias("ancestor_id"), F.lit(1).alias("depth")
+    closure, deepest = _checkpoint_max_depth(
+        edges.filter(F.col(parent_col).isNotNull()).select(
+            F.col(id_col).alias("id"),
+            F.col(parent_col).alias("ancestor_id"),
+            F.lit(1).alias("depth"),
+        )
     )
-    closure = frontier
-    depth = 1
-    while depth < max_depth:
-        if frontier.isEmpty():
-            break
-        # Extend: current frontier's ancestor's own parent. Each
-        # round is eagerly checkpointed: the isEmpty() probe is an
-        # action EVERY round and the final closure union replays
-        # every frontier again, so an unmaterialized round would be
-        # re-executed O(depth) times — quadratic join work. With the
-        # checkpoint, each join runs exactly once and both the probe
-        # and the union read cached blocks (frontiers only shrink).
-        nxt = (
-            frontier.alias("f")
-            .join(
-                edges.filter(F.col("parent_id").isNotNull()).alias("e"),
-                F.col("f.ancestor_id") == F.col("e.id"),
-            )
+    # `closure` holds every path of length <= reach; a longer path
+    # exists only if one of length exactly reach does
+    reach = 1
+    while deepest is not None and deepest >= reach and reach < max_depth:
+        span, reach = reach, 2 * reach
+        grown = (
+            closure.filter(F.col("depth") == span)
+            .alias("f")
+            .join(closure.alias("e"), F.col("f.ancestor_id") == F.col("e.id"))
             .select(
                 F.col("f.id").alias("id"),
-                F.col("e.parent_id").alias("ancestor_id"),
-                (F.col("f.depth") + 1).alias("depth"),
+                F.col("e.ancestor_id").alias("ancestor_id"),
+                (F.col("f.depth") + F.col("e.depth")).alias("depth"),
             )
-            .transform(materialize)
+            .filter(F.col("depth") <= max_depth)
         )
-        depth += 1
-        frontier = nxt
-        closure = closure.unionByName(frontier)
+        # re-checkpoint the union: a self-join over a union of two
+        # checkpoints fails analysis, and one frame keeps the next
+        # round's join a single scan per side
+        closure, deepest = _checkpoint_max_depth(closure.unionByName(grown))
     return closure
 
 

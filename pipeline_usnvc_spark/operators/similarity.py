@@ -390,6 +390,32 @@ def ivf_topk(
     )
 
 
+def _quantizer():
+    """A batch kernel: the 1e7 fixed-point int64 matrix of equal-length
+    vectors (callers drop null and wrong-length rows first). A null,
+    NaN or ±inf component has no integer, and a component too large for
+    exact int64 plane sums (|q|·65535·dim ≥ 2^63) would wrap: the SQL
+    twin (``lsh_buckets_sql``) raises there, and so does this, with
+    ``MalformedInputError`` instead of numpy's silent INT64_MIN.
+    Returned nested so the Arrow closures that call it pickle it by
+    value."""
+
+    def quantized(vecs):
+        import numpy as np
+
+        Q = np.floor(np.stack(vecs.to_numpy()).astype(np.float64) * 1e7)
+        if not (np.abs(Q) < 2.0**63 / (65535 * Q.shape[1])).all():
+            from pipeline_usnvc_spark.operators.contracts import MalformedInputError
+
+            raise MalformedInputError(
+                "LSH bucketing: a vector component is null, non-finite or "
+                "too large for exact int64 plane sums"
+            )
+        return Q.astype(np.int64)
+
+    return quantized
+
+
 def _exact_probe_buckets(
     df: DataFrame,
     n_planes: int,
@@ -408,20 +434,21 @@ def _exact_probe_buckets(
     are the integer plane dots themselves, and the flip ranking is
     (|margin| asc, plane idx asc) via a stable argsort — so the probe
     set, and with it q64's full candidate set, is bit-reproducible in
-    SQL and hash-oracle-able."""
+    SQL and hash-oracle-able. A null or wrong-length vector gets no
+    probe; a malformed component raises (``_quantizer``)."""
     import numpy as np
     import pandas as pd
 
     planes_T = _multitable_planes(1, n_planes, dim).T.copy()
     pows = np.power(2, np.arange(n_planes), dtype=np.int64)
     n_flips = min(max(nprobe - 1, 0), n_planes)
+    quantized = _quantizer()
 
     def batches(it):
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            S = np.floor(V * 1e7).astype(np.int64) @ planes_T  # (n, n_planes)
+            S = quantized(pdf["_v"]) @ planes_T  # (n, n_planes)
             b = (S > 0) @ pows  # (n,)
             # stable argsort on |margin| == (|margin| asc, p asc)
             closest = np.argsort(np.abs(S), axis=1, kind="stable")[:, :n_flips]
@@ -435,7 +462,9 @@ def _exact_probe_buckets(
                 }
             )
 
-    flat = df.select(F.col(id_col), to_double_array(vec_col).alias("_v"))
+    flat = df.select(F.col(id_col), to_double_array(vec_col).alias("_v")).filter(
+        F.size("_v") == dim
+    )
     id_type = flat.schema[id_col].dataType.simpleString()
     return flat.mapInPandas(batches, schema=f"{id_col} {id_type}, bucket bigint")
 
@@ -680,7 +709,9 @@ def _table_bucket_ids(
     independent hash tables, computed as ONE ``Q @ C.T`` integer
     matmul per Arrow batch inside mapInPandas. SLIM by design — only
     the id and a 2-int struct ride the ×n_tables explode; callers join
-    the vectors they need. A null or wrong-length vector gets no bucket.
+    the vectors they need. A null or wrong-length vector gets no bucket;
+    a null, non-finite or oversized component raises ``MalformedInputError``
+    (``_quantizer``).
 
     The earlier native formulation (n_tables·n_planes literal-array
     fold expressions) spent ~10 s on 500 rows at 24×4 — Catalyst
@@ -696,22 +727,22 @@ def _table_bucket_ids(
     predicate is an exact integer comparison — so the bucket table is
     bit-reproducible across engines (``lsh_buckets_sql`` is the
     DuckDB twin) and q62/q164 can be hash-oracled end-to-end.
-    Overflow headroom: |x| <= 2e3 per component (module constant
-    below); synthetic and unit-normalized embeddings sit at |x| <= 1.
+    Overflow headroom: |x| < 2^63 / (65535·dim·1e7) per component
+    (about 2e5 at dim 64, enforced by ``_quantizer``); synthetic and
+    unit-normalized embeddings sit at |x| <= 1.
     """
     import numpy as np
     import pandas as pd
 
     planes_T = _multitable_planes(n_tables, n_planes, dim).T.copy()
     pows = np.power(2, np.arange(n_planes), dtype=np.int64)
+    quantized = _quantizer()
 
     def batches(it):
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            Q = np.floor(V * 1e7).astype(np.int64)
-            bits = (Q @ planes_T) > 0  # (n, n_tables*n_planes)
+            bits = (quantized(pdf["_v"]) @ planes_T) > 0  # (n, n_tables*n_planes)
             B = bits.reshape(len(pdf), n_tables, n_planes) @ pows  # (n, n_tables)
             n = len(pdf)
             yield pd.DataFrame(

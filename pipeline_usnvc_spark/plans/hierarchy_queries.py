@@ -4,7 +4,7 @@ The test schema has no explicit tree, so a deterministic one is
 derived from ``customer``: node id = c_custkey, parent = c_custkey
 div 10 (nodes < 10 are roots). Same derivation on both sides; the
 oracle uses ``WITH RECURSIVE`` while the engine runs the iterative
-frontier-expansion closure (operators/hierarchy.py) — exactly the
+pointer-doubling closure (operators/hierarchy.py) — exactly the
 reference's ancestor-walk semantics (usnvc.py:508-515) done set-based.
 """
 
@@ -33,8 +33,8 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q20 — recursive ancestor closure (G1): iterative self-join to
-# fixpoint vs WITH RECURSIVE oracle. depth 1 = immediate parent.
+# q20 — recursive ancestor closure (G1): iterative doubling self-join
+# to fixpoint vs WITH RECURSIVE oracle. depth 1 = immediate parent.
 # ---------------------------------------------------------------------------
 @query(
     "q20_hierarchy_ancestors",
@@ -57,7 +57,7 @@ def q20_hierarchy_ancestors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q25 — the same ancestor closure through Spark 4's SQL recursion
 # (WITH RECURSIVE): the declarative alternative to the iterative
-# frontier loop — one logical plan, Catalyst owns the iteration.
+# doubling loop — one logical plan, Catalyst owns the iteration.
 # ---------------------------------------------------------------------------
 @query(
     "q25_recursive_cte",

@@ -145,10 +145,11 @@ def build_documents(silver: dict[str, DataFrame], run_timestamp: str | None = No
     # max_depth=32 (the operator default): USNVC's real tree is 8
     # levels, but a tighter 16 cap SILENTLY truncated deeper synthetic
     # trees (caught by tests/test_usnvc_deep_fixture.py's 24-level
-    # graft in round 9). The bound still terminates parent cycles —
-    # the fixpoint loop exits early on real trees, so a generous cap
-    # costs nothing (depth rounds run only while frontiers are
-    # non-empty).
+    # graft in round 9). The bound still terminates parent cycles (in
+    # 5 doubling rounds). A generous cap costs nothing on real trees:
+    # rounds double the reach (1, 2, 4, 8, ...) and stop as soon as the
+    # depth observed in a round's checkpoint falls short of its reach
+    # — 3 rounds for the 8-level tree.
     # Referential-integrity gate (the I5 fail-loudly rule; review
     # finding): a parent_id with no unit row would be SILENTLY dropped
     # by the closure's inner join below — the child would claim

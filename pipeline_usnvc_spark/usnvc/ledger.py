@@ -11,7 +11,7 @@ per-row schema validator.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -51,7 +51,7 @@ def change_events(
 
 
 def _envelope_line():
-    """The JSONL envelope expression shared by both sinks:
+    """The JSONL envelope expression
     ``{"source_data": <raw doc json>, "row_id": <escaped>}``. row_id
     is escaped via to_json (a quote/backslash/newline in an id would
     otherwise corrupt the line); source_data is already-serialized
@@ -66,71 +66,49 @@ def _envelope_line():
     )
 
 
-def observed_write(
-    docs: DataFrame,
-    out_dir: str,
-    observation_name: str = "doc_metrics",
-) -> dict[str, int]:
-    """Sink with ``Observation`` metrics: document count, null-id
-    count and total payload bytes are collected during the SAME
-    action as the write — no second pass over the data (the idiomatic
-    Spark alternative to foreach-accumulator counting, which costs an
-    extra action)."""
-    from pyspark.sql import Observation
-
-    obs = Observation(observation_name)
-    line = _envelope_line()
-    observed = docs.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.when(F.col("row_id").isNull(), 1).otherwise(0)).alias("n_null_ids"),
-        F.sum(F.length("source_data")).alias("payload_bytes"),
-    )
-    # the write_documents `ok` contract applies HERE too (review
-    # finding): a null row_id serializes to '{}' whose trimmed body is
-    # '' — the written line '{"source_data": ..., }' is invalid JSON —
-    # and a null source_data nulls the whole concat. The metrics still
-    # count the rejected rows (n_null_ids vs n_docs tells the caller
-    # how many were dropped).
-    ok = (
-        F.col("row_id").isNotNull()
-        & F.col("source_data").isNotNull()
-        & (F.col("source_data") != "")
-    )
-    observed.filter(ok).select(line.alias("value")).write.mode("overwrite").text(out_dir)
-    # sum() over zero rows is NULL: an empty (but successful) write
-    # must report zeros, not raise int(None)
-    return {k: int(v or 0) for k, v in obs.get.items()}
-
-
 def write_documents(
     docs: DataFrame,
     out_dir: str,
     quarantine_dir: str | None = None,
     ledger: ChangeLedger | None = None,
-) -> None:
+) -> dict[str, int]:
     """Validated envelope sink: ``{"source_data": <doc>, "row_id": <id>}``
     one JSON object per line. Rows failing the envelope contract
-    (null/empty id or doc) go to the quarantine path instead of
+    (null id, null or empty doc) go to the quarantine path instead of
     failing the job — the scalable version of the reference harness's
-    per-row schema rejection."""
-    ok = F.col("row_id").isNotNull() & F.col("source_data").isNotNull() & (F.col("source_data") != "")
-    line = _envelope_line()
-    valid = docs.filter(ok)
-    if ledger is not None:
-        # counted via observe() DURING the write action — a foreach
-        # here would re-execute the entire document-assembly plan as a
-        # second action, and would report rows even if the write then
-        # failed
-        from pyspark.sql import Observation
+    per-row schema rejection. A null row_id would serialize to '{}',
+    whose trimmed body is '' (an invalid line), and a null source_data
+    nulls the whole concat.
 
-        obs = Observation("write_documents_count")
-        valid = valid.observe(obs, F.count(F.lit(1)).alias("n"))
-    valid.select(line.alias("value")).write.mode("overwrite").text(out_dir)
+    The document plan runs once. An ``Observation`` on the valid-line
+    write collects, during that same action, the row count
+    ``n_docs``, ``n_null_ids``, the rejected count ``n_rejected`` and
+    ``payload_bytes``; they are returned, and the ledger's
+    ``documents_written`` counter gets the valid rows. The quarantine
+    write reads ``docs`` again only when a row was rejected; otherwise
+    it writes ``docs.limit(0)``, which Catalyst folds to an empty
+    relation, so no source is scanned and the directory still holds an
+    empty part file and ``_SUCCESS``.
+    """
+    ok = F.col("row_id").isNotNull() & F.col("source_data").isNotNull() & (F.col("source_data") != "")
+    obs = Observation()
+    observed = docs.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.when(F.col("row_id").isNull(), 1).otherwise(0)).alias("n_null_ids"),
+        F.sum(F.when(ok, 0).otherwise(1)).alias("n_rejected"),
+        F.sum(F.length("source_data")).alias("payload_bytes"),
+    )
+    observed.filter(ok).select(_envelope_line().alias("value")).write.mode("overwrite").text(out_dir)
+    # sum() over zero rows is NULL: an empty (but successful) write
+    # must report zeros, not raise int(None)
+    metrics = {k: int(v or 0) for k, v in obs.get.items()}
     if ledger is not None:
-        ledger.counter("documents_written").add(int(obs.get["n"] or 0))
+        ledger.counter("documents_written").add(metrics["n_docs"] - metrics["n_rejected"])
     if quarantine_dir is not None:
-        docs.filter(~ok).select(
+        rejected = docs.filter(~ok) if metrics["n_rejected"] else docs.limit(0)
+        rejected.select(
             F.coalesce(F.col("row_id"), F.lit("<null>")).alias("row_id"),
             F.coalesce(F.col("source_data"), F.lit("")).alias("source_data"),
         ).write.mode("overwrite").json(quarantine_dir)
+    return metrics

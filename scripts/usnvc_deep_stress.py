@@ -9,10 +9,10 @@ parent carrying an extra 5,000 direct children (the children_agg /
 nesting skew case) — and ASSERTS the hierarchy family's scale
 invariants instead of just timing them:
 
-  1. closure round-count: the ancestor closure's frontier loop runs
-     exactly depth-1 extension rounds (max(depth) == tree depth) and
-     the closure row count equals sum over nodes of their depth —
-     the O(depth) set-based walk, not O(n) per-row lookups;
+  1. closure shape: the ancestor closure reaches exactly depth-1
+     (max(depth) == tree depth - 1) and its row count equals the sum
+     over nodes of their depth — one row per path, from a set-based
+     walk in O(log depth) doubling rounds, not O(n) per-row lookups;
   2. doc count == units + 1 (every unit + the synthetic root);
   3. doc size is O(own fan-out), never O(n): every NON-hot document
      stays under the 280 KB bound observed on the real export's
@@ -143,7 +143,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     silver = build_silver(read_export(spark, str(export)))
 
-    # invariant 1: closure rounds == depth, rows == sum(node depths)
+    # invariant 1: max depth == tree depth - 1, rows == sum(node depths)
     t0 = time.perf_counter()
     clos = ancestors(
         silver["nvcsUnits"].select("element_global_id", "parent_id"),
@@ -156,7 +156,7 @@ def main() -> None:
     t_clos = time.perf_counter() - t0
     assert agg["max_depth"] == depth - 1, (agg["max_depth"], depth - 1)
     assert agg["rows"] == expect_closure_rows, (agg["rows"], expect_closure_rows)
-    print(f"closure: {agg['rows']} rows, {agg['max_depth']} rounds, {t_clos:.1f}s")
+    print(f"closure: {agg['rows']} rows, max depth {agg['max_depth']}, {t_clos:.1f}s")
 
     # invariants 2+3: doc count; size O(own fan-out), never O(n)
     hot = nodes[1][0]

@@ -3,8 +3,8 @@ three assertions the adversarial-scale script
 (scripts/usnvc_deep_stress.py, 265k units / depth 12 / +5k hot
 children — measured row in SCALE.md) makes, at a fast-but-still-deep
 shape: depth 12, fan-out 2 (8,191 units) with a 500-child hot
-parent. The closure must finish in exactly depth-1 extension rounds
-with sum-of-depths rows, documents must cover every unit plus the
+parent. The closure must reach exactly depth-1 with sum-of-depths
+rows, documents must cover every unit plus the
 synthetic root, no NON-hot document may exceed the 280 KB bound
 observed on the real export's worst bridge fan-out, and the hot
 parent's document must grow linearly in its OWN child count (doc
@@ -55,8 +55,8 @@ def test_deep_hierarchy_invariants(spark, deep_export):
     agg = clos.agg(
         F.max("depth").alias("max_depth"), F.count("*").alias("rows")
     ).collect()[0]
-    # rounds == tree depth: the frontier loop extends once per level,
-    # never per row
+    # max depth == tree depth - 1, one row per path: the closure works
+    # per level, never per row
     assert agg["max_depth"] == DEPTH - 1
     assert agg["rows"] == sum(lvl for _, _, lvl in nodes)
 

@@ -10,7 +10,11 @@ raise a named error, never return a silently different answer:
   q61's pairs, and q164's LSH verify (threshold mode, bucket blocks)
   against the SQL sweep over the same LSH candidate pairs;
 - q437's Lloyd kernel, which must raise MalformedInputError on a null
-  or null-component embedding instead of casting NaN to int64.
+  or null-component embedding instead of casting NaN to int64;
+- the LSH bucketers (``_table_bucket_ids``, ``_exact_probe_buckets``):
+  a null or wrong-length row gets no bucket, and a component with no
+  int64 fixed-point value raises MalformedInputError where the SQL twin
+  ``lsh_buckets_sql`` raises a conversion error.
 """
 
 from __future__ import annotations
@@ -25,9 +29,11 @@ from pyspark.sql import functions as F
 from pipeline_usnvc_spark.functions.vectors import cosine_similarity, to_double_array
 from pipeline_usnvc_spark.operators.similarity import (
     _certified_cosine,
+    _exact_probe_buckets,
     _table_bucket_ids,
     brute_force_topk,
     embedding_near_dup_lsh,
+    lsh_buckets_sql,
 )
 from pipeline_usnvc_spark.plans import QUERIES
 
@@ -200,11 +206,70 @@ def test_q221_matches_q61_pairs_on_malformed_input(spark, tmp_path, name):
 def test_q164_verify_matches_sql_on_malformed_input(spark, tmp_path, name):
     case_dir, _, _ = _write_case(spark, tmp_path, name)
     emb = spark.read.parquet(f"{case_dir}/embeddings.parquet")
+    if name == "nan_component":
+        # a NaN component has no LSH bucket: both the SQL sweep's
+        # candidates and the operator stop at the bucketer's named error
+        for build in (
+            lambda: _lsh_sql(emb),
+            lambda: embedding_near_dup_lsh(emb, threshold=0.4, n_tables=24, dim=4),
+        ):
+            with pytest.raises(Exception, match="MalformedInputError"):
+                build().collect()
+        return
     expected = _outcome(lambda: _lsh_sql(emb))
     got = _outcome(lambda: embedding_near_dup_lsh(emb, threshold=0.4, n_tables=24, dim=4))
     assert got == expected
-    if name == "nan_component":
-        assert any("nan" in row for row in expected[1]), "no NaN pair among the LSH candidates"
+
+
+LSH_BAD_ROWS = {
+    "null_row": None,
+    "ragged_row": [1.0, 0.0, 0.0],
+    "nan_component": [0.9, NAN, 0.0, 0.0],
+    "pos_inf": [0.0, INF, 0.0, 0.0],
+    "neg_inf": [-INF, 0.8, 0.2, 0.0],
+    "null_component": [0.5, None, 0.1, 0.2],
+    "oversized": [1e8, 0.0, 0.0, 0.0],
+}
+
+
+def _lsh_case(spark, tmp_path, name):
+    """BASE plus one bad row (vec_id 9), as a parquet path and frame."""
+    path = f"{tmp_path}/{name}.parquet"
+    rows = [(i, v) for i, _, v in BASE] + [(9, LSH_BAD_ROWS[name])]
+    spark.createDataFrame(rows, "vec_id bigint, embedding array<float>").coalesce(1).write.parquet(path)
+    return path, spark.read.parquet(path)
+
+
+def _bucket_ids(kernel, df):
+    if kernel == "table":
+        return _table_bucket_ids(df, 24, 4, 4, "vec_id", "embedding")
+    return _exact_probe_buckets(df, 4, 3, 4, "vec_id", "embedding")
+
+
+@pytest.mark.parametrize("kernel", ["table", "probe"])
+@pytest.mark.parametrize("name", ["null_row", "ragged_row"])
+def test_lsh_bucketing_gives_null_and_ragged_rows_no_bucket(spark, tmp_path, kernel, name):
+    _, df = _lsh_case(spark, tmp_path, name)
+    good = df.filter(F.col("vec_id") != 9)
+    got = sorted(map(tuple, _bucket_ids(kernel, df).collect()))
+    assert got == sorted(map(tuple, _bucket_ids(kernel, good).collect()))
+    assert {r[0] for r in got} == {i for i, _, _ in BASE}
+
+
+@pytest.mark.parametrize("kernel", ["table", "probe"])
+@pytest.mark.parametrize("name", ["nan_component", "pos_inf", "neg_inf", "null_component", "oversized"])
+def test_lsh_bucketing_rejects_components_without_an_integer(spark, tmp_path, kernel, name):
+    path, df = _lsh_case(spark, tmp_path, name)
+    with pytest.raises(Exception, match="MalformedInputError"):
+        _bucket_ids(kernel, df).collect()
+    if name in ("nan_component", "pos_inf", "neg_inf"):
+        # the SQL twin has no integer for the component either
+        import duckdb
+
+        with pytest.raises(duckdb.ConversionException):
+            duckdb.connect().execute(
+                "WITH " + lsh_buckets_sql(24, 4, 4, f"'{path}/*.parquet'") + " SELECT * FROM buckets"
+            ).fetchall()
 
 
 @pytest.mark.parametrize("bad", [None, [0.5, None, 0.1, 0.2]], ids=["null_row", "null_component"])

@@ -8,12 +8,18 @@ DataFrame evaluates them all, properties assert per-row.
 
 from __future__ import annotations
 
+import contextlib
+import math
+import random
 import re
+import tempfile
+from collections import Counter
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from pipeline_usnvc_spark.functions.text import clean_string, split_flagged_codes, tokens, word_shingles
+from pipeline_usnvc_spark.operators.checkpoint import materialize
 
 
 def _py_clean(s: str) -> str:
@@ -80,30 +86,85 @@ def test_split_flagged_codes_property(spark, spec):
         assert r["f"]["Uncertainty"] == unc
 
 
+def _py_paths(edges: list[tuple[int, int | None]], max_depth: int) -> Counter:
+    """Every (id, ancestor_id, depth) path of length 1..max_depth, one
+    entry per path: the multiset a closure must return, cycles included."""
+    parents: dict[int, list[int]] = {}
+    for i, p in edges:
+        if p is not None:
+            parents.setdefault(i, []).append(p)
+    out: Counter = Counter()
+    for i in {i for i, _ in edges}:
+        level = [i]
+        for d in range(1, max_depth + 1):
+            level = [p for node in level for p in parents.get(node, [])]
+            out.update((i, p, d) for p in level)
+    return out
+
+
+@contextlib.contextmanager
+def _materialize_mode(spark, reliable: bool):
+    """localCheckpoint, or a reliable checkpoint under a fresh
+    checkpoint dir that is unset again afterwards (the session is shared)."""
+    sc = spark.sparkContext
+    if not reliable:
+        yield
+        return
+    sc.setCheckpointDir(tempfile.mkdtemp())
+    try:
+        yield
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+
+
 @settings(max_examples=5, deadline=None)
-@given(st.integers(min_value=2, max_value=25), st.integers(min_value=2, max_value=5), st.randoms())
-def test_ancestor_closure_on_random_forest(spark, n, fanout, rnd):
+@given(
+    st.integers(min_value=0, max_value=25),
+    st.integers(min_value=0, max_value=2),
+    st.sampled_from([1, 2, 3, 10, 32]),
+    st.booleans(),
+    st.randoms(),
+)
+@example(0, 0, 32, False, random.Random(0))  # empty edges
+@example(0, 0, 32, True, random.Random(0))
+@example(25, 2, 1, True, random.Random(1))
+@example(25, 2, 2, False, random.Random(2))
+@example(25, 1, 3, True, random.Random(3))
+@example(25, 2, 10, False, random.Random(4))
+@example(25, 2, 32, True, random.Random(5))
+def test_ancestor_closure_on_random_forest(spark, n, n_cycles, max_depth, reliable, rnd):
     from pipeline_usnvc_spark.operators.hierarchy import ancestors
 
-    # random forest: node i's parent is a random earlier node (or root)
-    parents = {}
-    for i in range(n):
-        parents[i] = None if (i == 0 or rnd.random() < 0.2) else rnd.randrange(0, i)
-    edges = spark.createDataFrame(
-        [(i, parents[i]) for i in range(n)], "id bigint, parent_id bigint"
-    )
-    rows = ancestors(edges, "id", "parent_id", max_depth=n + 1).collect()
-    got = {}
-    for r in rows:
-        got.setdefault(r["id"], {})[r["depth"]] = r["ancestor_id"]
-    for i in range(n):
-        chain = []
-        p = parents[i]
-        while p is not None:
-            chain.append(p)
-            p = parents[p]
-        expect = {d + 1: a for d, a in enumerate(chain)}
-        assert got.get(i, {}) == expect, f"node {i}"
+    # random forest: node i's parent is a random earlier node (or root),
+    # plus planted 2-cycles (a <-> b) that only max_depth terminates
+    edges = [(i, None if (i == 0 or rnd.random() < 0.2) else rnd.randrange(0, i)) for i in range(n)]
+    for c in range(n_cycles):
+        a, b = 1000 + 2 * c, 1001 + 2 * c
+        edges += [(a, b), (b, a)]
+    frame = spark.createDataFrame(edges, "id bigint, parent_id bigint")
+    with _materialize_mode(spark, reliable):
+        rows = ancestors(frame, "id", "parent_id", max_depth=max_depth).collect()
+    got = Counter((r["id"], r["ancestor_id"], r["depth"]) for r in rows)
+    assert got == _py_paths(edges, max_depth)
+
+
+def test_ancestor_closure_rounds_are_logarithmic(spark, monkeypatch):
+    """A 24-level chain (depths up to 23) is closed with at most
+    ceil(log2 24) + 1 = 6 checkpoints: the seed plus one per doubling."""
+    from pipeline_usnvc_spark.operators import hierarchy
+
+    calls = []
+
+    def counting(df, *args, **kwargs):
+        calls.append(1)
+        return materialize(df, *args, **kwargs)
+
+    monkeypatch.setattr(hierarchy, "materialize", counting)
+    edges = [(i, i - 1 if i else None) for i in range(24)]
+    frame = spark.createDataFrame(edges, "id bigint, parent_id bigint")
+    rows = hierarchy.ancestors(frame, "id", "parent_id").collect()
+    assert Counter((r["id"], r["ancestor_id"], r["depth"]) for r in rows) == _py_paths(edges, 32)
+    assert len(calls) <= math.ceil(math.log2(24)) + 1
 
 
 # ---------------------------------------------------------------------------

@@ -173,7 +173,7 @@ def test_round10_source_guards(spark, tmp_path):
        collide with its reserved metadata/corrupt columns (previously
        produced a duplicate-name frame that broke every downstream
        reference).
-    2. observed_write applies the write_documents `ok` contract: a
+    2. the observed sink (write_documents) applies its `ok` contract: a
        null row_id previously serialized to the invalid JSON line
        '{"source_data": ..., }' and a null source_data wrote a blank
        line; both are now dropped while the metrics still count them.
@@ -186,7 +186,7 @@ def test_round10_source_guards(spark, tmp_path):
     import pytest
 
     from pipeline_usnvc_spark.sources.kafka import decode_kafka_envelope
-    from pipeline_usnvc_spark.usnvc.ledger import observed_write
+    from pipeline_usnvc_spark.usnvc.ledger import write_documents
 
     raw = spark.createDataFrame(
         [(b"{}", "t", 0, 0, None)],
@@ -202,7 +202,7 @@ def test_round10_source_guards(spark, tmp_path):
         "source_data string, row_id string",
     )
     out = str(tmp_path / "obs")
-    metrics = observed_write(docs, out)
+    metrics = write_documents(docs, out)
     assert metrics["n_docs"] == 3 and metrics["n_null_ids"] == 1
     lines = [
         json.loads(ln)

@@ -159,10 +159,10 @@ def test_cached_hierarchy_display_order_from_confidence_dim(docs_by_id):
 def test_observed_write_metrics(spark, export_dir, tmp_path, docs_by_id):
     from pipeline_usnvc_spark.usnvc.ingest import build_silver, read_export
     from pipeline_usnvc_spark.usnvc.docs import build_documents
-    from pipeline_usnvc_spark.usnvc.ledger import observed_write
+    from pipeline_usnvc_spark.usnvc.ledger import write_documents
 
     docs = build_documents(build_silver(read_export(spark, export_dir)), "2026-01-01T00:00:00")
-    metrics = observed_write(docs, str(tmp_path / "obs_out"))
+    metrics = write_documents(docs, str(tmp_path / "obs_out"))
     assert metrics["n_docs"] == len(UNIT_IDS) + 1
     assert metrics["n_null_ids"] == 0
     assert metrics["payload_bytes"] > 1000
@@ -184,6 +184,69 @@ def test_sink_roundtrip(spark, export_dir, tmp_path, docs_by_id):
     parsed = [json.loads(l) for l in lines]
     assert all(set(p) == {"source_data", "row_id"} for p in parsed)
     assert ledger.counts()["documents_written"] == len(UNIT_IDS) + 1
+
+
+def _part_lines(d) -> list[str]:
+    return [ln for p in sorted(d.glob("part-*")) for ln in p.read_text().splitlines() if ln]
+
+
+def test_sink_quarantines_exactly_the_rejects(spark, tmp_path):
+    from pipeline_usnvc_spark.usnvc.ledger import ChangeLedger, write_documents
+
+    docs = spark.createDataFrame(
+        [
+            ('{"id": 1}', "a"),
+            ('{"id": 2}', None),
+            (None, "c"),
+            ("", "d"),
+            ('{"id": 5}', 'e"\\'),
+        ],
+        "source_data string, row_id string",
+    )
+    ledger = ChangeLedger(spark)
+    metrics = write_documents(docs, str(tmp_path / "out"), str(tmp_path / "bad"), ledger)
+    valid = [json.loads(ln) for ln in _part_lines(tmp_path / "out")]
+    assert sorted((v["row_id"], v["source_data"]["id"]) for v in valid) == [("a", 1), ('e"\\', 5)]
+    bad = sorted((r["row_id"], r["source_data"]) for r in map(json.loads, _part_lines(tmp_path / "bad")))
+    assert bad == [("<null>", '{"id": 2}'), ("c", ""), ("d", "")]
+    assert ledger.counts()["documents_written"] == 2
+    assert metrics["n_docs"] == 5 and metrics["n_null_ids"] == 1
+
+
+def test_sink_without_rejects_leaves_an_empty_quarantine(spark, tmp_path):
+    from pipeline_usnvc_spark.usnvc.ledger import write_documents
+
+    docs = spark.createDataFrame([('{"id": 1}', "a"), ('{"id": 2}', "b")], "source_data string, row_id string")
+    write_documents(docs, str(tmp_path / "out"), str(tmp_path / "bad"))
+    bad = tmp_path / "bad"
+    assert (bad / "_SUCCESS").exists() and list(bad.glob("part-*"))
+    # the data files hold nothing (the hidden .crc files are checksums)
+    assert sum(p.stat().st_size for p in bad.iterdir() if not p.name.startswith(".")) == 0
+    assert len(_part_lines(tmp_path / "out")) == 2
+
+
+def test_sink_runs_the_document_plan_once(spark, tmp_path):
+    """With a quarantine dir and no rejects, every document row is
+    computed once: the valid write observes the rejected count, so the
+    quarantine write does not replay the plan."""
+    from pyspark.sql import functions as F
+
+    from pipeline_usnvc_spark.usnvc.ledger import write_documents
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(rid):
+        seen.add(1)
+        return rid
+
+    tick = F.udf(count_row, "string").asNondeterministic()
+    docs = spark.range(40).select(
+        F.concat(F.lit('{"id": '), F.col("id").cast("string"), F.lit("}")).alias("source_data"),
+        tick(F.col("id").cast("string")).alias("row_id"),
+    )
+    write_documents(docs, str(tmp_path / "out"), str(tmp_path / "bad"))
+    assert len(_part_lines(tmp_path / "out")) == 40
+    assert seen.value == 40
 
 
 # ---------------------------------------------------------------------------
