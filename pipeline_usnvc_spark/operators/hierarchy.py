@@ -1,4 +1,4 @@
-"""Hierarchy / graph operators (reference G1-G5).
+"""Hierarchy / graph operators (reference G1-G2; usnvc/docs.py does G3-G5).
 
 The reference walks an adjacency list (``unit.parent_id`` →
 ``element_global_id``) one row at a time with O(depth) lookups per
@@ -85,57 +85,16 @@ def ancestors(
     return closure
 
 
-def ancestor_array(
-    edges: DataFrame,
-    id_col: str = "id",
-    parent_col: str = "parent_id",
-    max_depth: int = 32,
-    root_fallback: int | None = None,
-) -> DataFrame:
-    """(id, ancestors: array<id-type>) ordered nearest-ancestor-first.
-
-    ``root_fallback`` reproduces reference G5 (usnvc.py:446-449):
-    nodes with no ancestors get ``[root_fallback]`` instead of empty.
-    """
-    clos = ancestors(edges, id_col, parent_col, max_depth)
-    arr = (
-        clos.groupBy("id")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("depth", "ancestor_id"))),
-                lambda s: s["ancestor_id"],
-            ).alias("ancestors")
-        )
-    )
-    out = (
-        edges.select(F.col(id_col).alias("id"))
-        .join(arr, "id", "left")
-    )
-    if root_fallback is not None:
-        out = out.withColumn(
-            "ancestors",
-            F.coalesce(F.col("ancestors"), F.array(F.lit(root_fallback))),
-        )
-    return out
-
-
 def children_agg(
     edges: DataFrame,
     id_col: str = "id",
     parent_col: str = "parent_id",
-    order_by: str | None = None,
 ) -> DataFrame:
-    """(parent, children: array) — reference G2 (usnvc.py:505-506, 530)."""
-    order_col = order_by or id_col
+    """(parent, children: sorted array) — reference G2 (usnvc.py:505-506, 530)."""
     return (
         edges.filter(F.col(parent_col).isNotNull())
         .groupBy(F.col(parent_col).alias("id"))
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct(F.col(order_col).alias("_o"), F.col(id_col).alias("_c")))),
-                lambda s: s["_c"],
-            ).alias("children")
-        )
+        .agg(F.sort_array(F.collect_list(id_col)).alias("children"))
     )
 
 

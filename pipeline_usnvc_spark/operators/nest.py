@@ -8,9 +8,10 @@ ONE aggregation per related table:
     groupBy(key).agg(collect_list(struct(...))) → left join to units
 
 which shuffles each related table once on the key instead of scanning
-it once per unit. ``collect_list`` order is partition-dependent, so a
-deterministic ``order_by`` tiebreaker is imposed via sort_array over
-a (sortkey, payload) struct (SURVEY §7.4.7).
+it once per unit. ``collect_list`` order is partition-dependent, so
+every nest is ordered: sort_array over a (order_by, payload) struct
+sorts by ``order_by`` and breaks its ties on the payload itself
+(SURVEY §7.4.7).
 """
 
 from __future__ import annotations
@@ -23,18 +24,15 @@ def nest_records(
     df: DataFrame,
     key: str,
     payload: list[Column] | list[str],
-    order_by: str | None = None,
+    order_by: str | Column,
     out_col: str = "records",
 ) -> DataFrame:
-    """(key, array<struct<payload>>) with deterministic in-array order."""
+    """(key, array<struct<payload>>) ordered by (``order_by``, payload)."""
     payload_cols = [F.col(c) if isinstance(c, str) else c for c in payload]
-    if order_by is None:
-        agg = F.collect_list(F.struct(*payload_cols))
-    else:
-        # Sort by the tiebreaker embedded at position 0, then strip it.
-        wrapped = F.collect_list(F.struct(F.col(order_by).alias("_ord"), F.struct(*payload_cols).alias("_p")))
-        agg = F.transform(F.sort_array(wrapped), lambda s: s["_p"])
-    return df.groupBy(key).agg(agg.alias(out_col))
+    order_col = F.col(order_by) if isinstance(order_by, str) else order_by
+    # Sort by the order key embedded at position 0, then strip it.
+    wrapped = F.collect_list(F.struct(order_col.alias("_ord"), F.struct(*payload_cols).alias("_p")))
+    return df.groupBy(key).agg(F.transform(F.sort_array(wrapped), lambda s: s["_p"]).alias(out_col))
 
 
 def attach_nested(
@@ -42,19 +40,13 @@ def attach_nested(
     related: DataFrame,
     key: str,
     payload: list[Column] | list[str],
-    order_by: str | None = None,
+    order_by: str | Column,
     out_col: str = "records",
-    empty_as_null: bool = True,
 ) -> DataFrame:
     """Left-join nested sub-records onto a base table.
 
-    ``empty_as_null=True`` reproduces the reference's row-existence
-    guard (``if len(df.index) > 0``, usnvc.py:320): units with no
-    related rows carry null (key absent in the JSON sink) rather than
-    an empty array.
+    Reproduces the reference's row-existence guard (``if
+    len(df.index) > 0``, usnvc.py:320): a key with no related rows
+    carries null (key absent in the JSON sink), not an empty array.
     """
-    nested = nest_records(related, key, payload, order_by, out_col)
-    out = base.join(nested, key, "left")
-    if not empty_as_null:
-        out = out.withColumn(out_col, F.coalesce(F.col(out_col), F.array().cast(nested.schema[out_col].dataType)))
-    return out
+    return base.join(nest_records(related, key, payload, order_by, out_col), key, "left")

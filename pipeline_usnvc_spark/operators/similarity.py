@@ -913,8 +913,22 @@ def gram_matrix_quantized(
     # reduction is the exact decimal sum.
     def partials(it):
         for pdf in it:
-            mat = np.stack(pdf["v"].to_numpy())  # rows × d, float64
-            q = np.floor(mat * quant).astype(np.int64)
+            if not len(pdf):
+                continue
+            rows = pdf["v"].to_numpy()
+            # a ragged batch has no matrix, and a null (NaN), ±inf or
+            # huge component has no int64 q whose products fit int64:
+            # numpy would cast it to INT64_MIN and wrap silently, where
+            # the SQL twin's BIGINT cast raises
+            f = np.floor(np.stack(rows) * quant) if len({len(r) for r in rows}) == 1 else None
+            if f is None or not (np.abs(f) < 2.0**63).all() or int(np.abs(f).max(initial=0)) ** 2 >= 2**63:
+                from pipeline_usnvc_spark.operators.contracts import MalformedInputError
+
+                raise MalformedInputError(
+                    "gram_matrix_quantized: a batch is ragged or a component is "
+                    "null, non-finite or too large for exact int64 products"
+                )
+            q = f.astype(np.int64)
             if add_bias:
                 q = np.concatenate(
                     [q, np.full((q.shape[0], 1), quant, dtype=np.int64)], axis=1
@@ -954,7 +968,8 @@ def gram_matrix_quantized(
     sel = [to_double_array(vec_col).alias("v")]
     if label_col:
         sel.append(F.col(label_col).alias("y"))
-    v = vectors.select(*sel)
+    # a null row contributes nothing, as SQL's unnest drops it
+    v = vectors.select(*sel).filter(F.col("v").isNotNull())
     parts = v.mapInPandas(partials, schema="dim_i int, dim_j int, part_sxy long")
     return parts.groupBy("dim_i", "dim_j").agg(
         F.sum(F.col("part_sxy").cast("decimal(38,0)")).alias("sxy")

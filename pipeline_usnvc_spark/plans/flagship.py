@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pipeline_usnvc_spark.operators.joins import decode_dimension
 from pipeline_usnvc_spark.operators.nest import attach_nested
 from pipeline_usnvc_spark.sources.tables import load_table
 
@@ -24,9 +25,8 @@ def customer_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").withColumnRenamed("o_custkey", "c_custkey")
 
     # Dimension decode (broadcast): customer → nation → region.
-    decoded = cust.join(
-        F.broadcast(nation.withColumnRenamed("n_nationkey", "c_nationkey")), "c_nationkey", "left"
-    ).join(F.broadcast(region.withColumnRenamed("r_regionkey", "n_regionkey")), "n_regionkey", "left")
+    decoded = decode_dimension(cust, nation, "c_nationkey", rename={"n_nationkey": "c_nationkey"})
+    decoded = decode_dimension(decoded, region, "n_regionkey", rename={"r_regionkey": "n_regionkey"})
 
     # Nest each customer's orders (newest first deterministic order).
     nested = attach_nested(

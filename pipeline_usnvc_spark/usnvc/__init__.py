@@ -3,8 +3,9 @@ capability of the reference (bgotthold-usgs/pipeline_USNVC) as one
 declarative Spark job.
 
     ingest.read_export(spark, dir)   — 18 schema'd TSV scans (S1-S2)
-    silver.build_silver(tables)      — joins J1-J9, one cached pass
+    ingest.build_silver(tables)      — joins and dimension decodes J1-J9
     docs.build_documents(silver)     — nesting, hierarchy closure,
-                                       doc assembly, root synthesis,
-                                       JSON envelope (S3)
+                                       doc assembly, root synthesis
+    ledger.write_documents(docs, …)  — JSON envelope, validated sink
+                                       and quarantine (S3/S6)
 """

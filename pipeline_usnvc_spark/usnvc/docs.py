@@ -3,9 +3,11 @@ from silver frames to the per-unit JSON envelope.
 
 Replaces the reference's per-row build (usnvc.py:238-490: 8 O(n)
 filtered lookups + an O(depth) ancestor walk PER ROW) with set-based
-equivalents: one groupBy/collect_list nest per related table (J10/A2)
-and one iterative closure for the whole hierarchy (G1). JSON "absent
-key" semantics come from to_json's null-field dropping (P5/P6).
+equivalents built from the engine's operators: one ordered nest per
+related table (``operators/nest``, J10/A2) and one closure for the whole
+hierarchy (``operators/hierarchy``, G1), whose ancestors and children are
+nested the same way. JSON "absent key" semantics come from to_json's
+null-field dropping (P5/P6).
 
 Documented fidelity decisions (SURVEY §2.9):
   - Nation codes are trimmed before lookup (fixes the reference's
@@ -37,7 +39,9 @@ from pipeline_usnvc_spark.functions.text import (
     display_title,
     split_flagged_codes,
 )
+from pipeline_usnvc_spark.operators.checkpoint import materialize
 from pipeline_usnvc_spark.operators.hierarchy import ancestors as ancestor_closure
+from pipeline_usnvc_spark.operators.nest import attach_nested, nest_records
 
 # Static ISO-3166 alpha-2 → name map for the export's nation codes
 # (US/CA/MX in the shipped data; extend freely). Replaces the dead
@@ -61,15 +65,36 @@ _HIER_COLS = [
 ]
 
 
-# The hierarchy-record array type, DERIVED from _HIER_COLS so the two
-# empty-array coalesce branches in cached_hierarchy can never drift
-# from the struct builder by hand (review finding: the ~200-char DDL
-# literal was pasted twice).
-_HIER_ARRAY_DDL = (
-    "array<struct<"
-    + ",".join(f"{c}:string" for c in _HIER_COLS)
-    + ",`Display Title`:string>>"
-)
+def _title() -> Column:
+    """Display Title of the unit in scope (usnvc.py:325-332)."""
+    return display_title(
+        F.col("hierarchylevel"),
+        F.col("classificationcode"),
+        F.col("colloquialname"),
+        F.col("translatedname"),
+        F.col("databasecode"),
+    )
+
+
+def _hier_record() -> list[Column]:
+    """The 9-column hierarchy record + Display Title (usnvc.py:500-530):
+    the payload of the ancestor and child nests and the unit's own
+    Cached Hierarchy entry."""
+    return [F.col(c).alias(c) for c in _HIER_COLS] + [_title().alias("Display Title")]
+
+
+# Bridge nests that keep every column of the merged frame — pandas
+# to_dict('records') keeps both join-key spellings: (silver frame,
+# order key, nested column).
+_ALL_COLUMN_BRIDGES = [
+    ("unitXSimilarUnit", "simglobal_id", "_similar"),
+    ("nvcsDistribution", "subnation_id", "_dist"),
+    ("usfsEcoregionDistribution1994", "usfs_ecoregion_id", "_eco94"),
+    ("usfsEcoregionDistribution2007", "usfs_ecoregion_2007_id", "_eco07"),
+    ("unitPredecessors", "predecessor_id", "_preds"),
+    ("obsoleteUnits", "obsoletename", "_obsn"),
+    ("obsoleteParents", "obsoleteparentcode", "_obsp"),
+]
 
 
 def _s(name: str, col: Column | None = None) -> Column:
@@ -81,35 +106,9 @@ def _clean_opt(c: str) -> Column:
     return clean_string(F.col(c))
 
 
-def _hier_struct(prefix: str = "") -> Column:
-    """The 9-column hierarchy record + Display Title (usnvc.py:500-530)."""
-    p = lambda c: F.col(prefix + c) if prefix else F.col(c)
-    return F.struct(
-        *[p(c).alias(c) for c in _HIER_COLS],
-        display_title(
-            p("hierarchylevel"),
-            p("classificationcode"),
-            p("colloquialname"),
-            p("translatedname"),
-            p("databasecode"),
-        ).alias("Display Title"),
-    )
-
-
-def _nest(df: DataFrame, order_by: Column, payload: list[Column]) -> DataFrame:
-    """groupBy(element_global_id) → deterministically ordered
-    array<struct> (the J10 rewrite)."""
-    wrapped = F.collect_list(F.struct(order_by.alias("_o"), F.struct(*payload).alias("_p")))
-    return df.groupBy("element_global_id").agg(
-        F.transform(F.sort_array(wrapped), lambda s: s["_p"]).alias("arr")
-    )
-
-
-def _all_cols_struct(df: DataFrame, order_by: str) -> DataFrame:
-    """Nest every column of a merged frame — pandas to_dict('records')
-    keeps all columns incl. both join-key spellings."""
-    payload = [F.col(c).alias(c) for c in df.columns]
-    return _nest(df, F.col(order_by), payload)
+def _record_ids(records: str) -> Column:
+    """The int ids of a nested hierarchy-record array, in its order."""
+    return F.transform(F.col(records), lambda r: r["element_global_id"].cast("int"))
 
 
 def build_documents(silver: dict[str, DataFrame], run_timestamp: str | None = None) -> DataFrame:
@@ -120,26 +119,10 @@ def build_documents(silver: dict[str, DataFrame], run_timestamp: str | None = No
         run_timestamp = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None).isoformat()
 
     # Materialized once: ~5 consumers below (closure edges, ancestor
-    # payload, children agg, the main unit chain, the root agg) would
+    # payload, children nest, the main unit chain, the root agg) would
     # each replay the multiline-CSV scans + silver joins — Spark does
     # not dedupe common subplans across one action.
-    from pipeline_usnvc_spark.operators.checkpoint import materialize
-
     units = materialize(silver["nvcsUnits"])
-
-    # --- per-unit nested sub-records (8 nests; J10/A2) ---------------
-    refs = _nest(
-        silver["unitReferences"],
-        F.col("reference_id"),
-        [_s("Short Citation", F.col("shortcitation")), _s("Full Citation", F.col("fullcitation"))],
-    )
-    similar = _all_cols_struct(silver["unitXSimilarUnit"], "simglobal_id")
-    distribution = _all_cols_struct(silver["nvcsDistribution"], "subnation_id")
-    eco94 = _all_cols_struct(silver["usfsEcoregionDistribution1994"], "usfs_ecoregion_id")
-    eco07 = _all_cols_struct(silver["usfsEcoregionDistribution2007"], "usfs_ecoregion_2007_id")
-    preds = _all_cols_struct(silver["unitPredecessors"], "predecessor_id")
-    obs_names = _all_cols_struct(silver["obsoleteUnits"], "obsoletename")
-    obs_parents = _all_cols_struct(silver["obsoleteParents"], "obsoleteparentcode")
 
     # --- hierarchy (G1-G3): closure once for all units ---------------
     # max_depth=32 (the operator default): USNVC's real tree is 8
@@ -179,61 +162,41 @@ def build_documents(silver: dict[str, DataFrame], run_timestamp: str | None = No
         "parent_id",
         max_depth=32,
     )
-    anc_payload = (
-        clos.join(
-            units.select(*[F.col(c).alias(f"a_{c}") for c in _HIER_COLS]),
-            clos["ancestor_id"] == F.col("a_element_global_id"),
-        )
-        .groupBy("id")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct(F.col("depth").alias("_o"), _hier_struct("a_").alias("_p")))),
-                lambda s: s["_p"],
-            ).alias("anc_records"),
-            F.transform(
-                F.sort_array(F.collect_list(F.struct(F.col("depth").alias("_o"), F.col("ancestor_id").alias("_i")))),
-                lambda s: s["_i"].cast("int"),
-            ).alias("anc_ids"),
-        )
+    # one ancestor per depth, so ordering by depth alone is total
+    anc = nest_records(
+        clos.join(units.select(*_HIER_COLS), F.col("ancestor_id") == F.col("element_global_id")),
+        "id",
+        _hier_record(),
+        "depth",
+        "anc_records",
     )
-    children = (
-        units.filter(F.col("parent_id").isNotNull())
-        .groupBy(F.col("parent_id").alias("id"))
-        .agg(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(F.col("element_global_id").cast("int").alias("_o"), _hier_struct().alias("_p"))
-                    )
-                ),
-                lambda s: s["_p"],
-            ).alias("child_records"),
-            F.sort_array(F.collect_list(F.col("element_global_id").cast("int"))).alias("child_ids"),
-        )
+    children = nest_records(
+        units.filter(F.col("parent_id").isNotNull()).withColumn("id", F.col("parent_id")),
+        "id",
+        _hier_record(),
+        F.col("element_global_id").cast("int"),
+        "child_records",
     )
 
+    # --- per-unit nested sub-records (8 nests; J10/A2) ---------------
+    u = attach_nested(
+        units,
+        silver["unitReferences"],
+        "element_global_id",
+        [_s("Short Citation", F.col("shortcitation")), _s("Full Citation", F.col("fullcitation"))],
+        "reference_id",
+        "_refs",
+    )
+    for name, order_by, out_col in _ALL_COLUMN_BRIDGES:
+        u = attach_nested(u, silver[name], "element_global_id", silver[name].columns, order_by, out_col)
     u = (
-        units.join(refs.withColumnRenamed("arr", "_refs"), "element_global_id", "left")
-        .join(similar.withColumnRenamed("arr", "_similar"), "element_global_id", "left")
-        .join(distribution.withColumnRenamed("arr", "_dist"), "element_global_id", "left")
-        .join(eco94.withColumnRenamed("arr", "_eco94"), "element_global_id", "left")
-        .join(eco07.withColumnRenamed("arr", "_eco07"), "element_global_id", "left")
-        .join(preds.withColumnRenamed("arr", "_preds"), "element_global_id", "left")
-        .join(obs_names.withColumnRenamed("arr", "_obsn"), "element_global_id", "left")
-        .join(obs_parents.withColumnRenamed("arr", "_obsp"), "element_global_id", "left")
-        .join(anc_payload, units["element_global_id"] == anc_payload["id"], "left")
+        u.join(anc, u["element_global_id"] == anc["id"], "left")
         .drop("id")
-        .join(children, units["element_global_id"] == children["id"], "left")
+        .join(children, u["element_global_id"] == children["id"], "left")
         .drop("id")
     )
 
-    title = display_title(
-        F.col("hierarchylevel"),
-        F.col("classificationcode"),
-        F.col("colloquialname"),
-        F.col("translatedname"),
-        F.col("databasecode"),
-    )
+    title = _title()
 
     # Nations parse (E4) with static enrichment (fixed I4).
     # E4 parse via the ONE flagged-code parser (functions/text.py
@@ -254,10 +217,11 @@ def build_documents(silver: dict[str, DataFrame], run_timestamp: str | None = No
         ),
     )
 
+    no_records = F.array().cast(anc.schema["anc_records"].dataType)
     cached_hierarchy = F.concat(
-        F.coalesce(F.col("anc_records"), F.array().cast(_HIER_ARRAY_DDL)),
-        F.array(_hier_struct()),
-        F.coalesce(F.col("child_records"), F.array().cast(_HIER_ARRAY_DDL)),
+        F.coalesce(F.col("anc_records"), no_records),
+        F.array(F.struct(*_hier_record())),
+        F.coalesce(F.col("child_records"), no_records),
     )
 
     doc = F.struct(
@@ -358,8 +322,8 @@ def build_documents(silver: dict[str, DataFrame], run_timestamp: str | None = No
         ).alias("References"),
         title.alias("title"),
         F.coalesce(F.col("parent_id").cast("int"), F.lit(0)).alias("parent"),
-        F.coalesce(F.col("child_ids"), F.array().cast("array<int>")).alias("children"),
-        F.coalesce(F.col("anc_ids"), F.array(F.lit(0))).alias("ancestors"),
+        F.coalesce(_record_ids("child_records"), F.array().cast("array<int>")).alias("children"),
+        F.coalesce(_record_ids("anc_records"), F.array(F.lit(0))).alias("ancestors"),
         F.col("element_global_id").alias("id"),
     )
 

@@ -7,7 +7,8 @@ the reference re-ran the whole thing per output row (usnvc.py:71,
 its biggest inefficiency; SURVEY §2.9.7).
 
 Scale notes: every ``d_*`` dimension is tiny (3-1,506 rows) and
-broadcast; the only shuffling joins are units⟕descriptions and the
+decoded by ``operators/joins.decode_dimension``, which broadcasts it;
+the only shuffling joins are units⟕descriptions and the
 per-bridge nests keyed on element_global_id — at 100 TB those are the
 natural partition keys; build_documents materializes the units silver
 once (operators/checkpoint) so its multiline-CSV scan + join subtree
@@ -27,8 +28,8 @@ way).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from pipeline_usnvc_spark.operators.joins import decode_dimension
 from pipeline_usnvc_spark.sources.delimited import read_delimited
 from pipeline_usnvc_spark.usnvc.schemas import EXPORT_SCHEMAS
 
@@ -62,55 +63,42 @@ def read_export(spark: SparkSession, export_dir: str) -> dict[str, DataFrame]:
 
 def build_silver(t: dict[str, DataFrame]) -> dict[str, DataFrame]:
     """The 9 named frames of the reference's preprocess (usnvc.py:87-97),
-    as lazy DataFrames. Key spellings: pandas merge keeps BOTH key
-    columns when names differ (left_on/right_on), so dimension joins
-    here join on expressions — both spellings survive into the nested
+    as lazy DataFrames. Every ``d_*`` decode is ``decode_dimension``.
+    Key spellings: pandas merge keeps BOTH key columns when names
+    differ (left_on/right_on), so those decodes pass ``dim_key`` and
+    join on an expression — both spellings survive into the nested
     records, matching reference output shape (SURVEY §7.4.4).
     """
     # J1: units ⟕ descriptions (1:1) — J2: ⟕ confidence dim (renamed key)
-    conf = t["d_classif_confidence"].withColumnRenamed(
-        "D_CLASSIF_CONFIDENCE_ID", "classif_confidence_id"
-    )
-    nvcs_units = (
-        t["unit"]
-        .join(t["unitDescription"], "element_global_id", "left")
-        .join(F.broadcast(conf), "classif_confidence_id", "left")
+    nvcs_units = decode_dimension(
+        t["unit"].join(t["unitDescription"], "element_global_id", "left"),
+        t["d_classif_confidence"],
+        "classif_confidence_id",
+        rename={"D_CLASSIF_CONFIDENCE_ID": "classif_confidence_id"},
     )
 
     # J3: references bridge ⋈ citation dim
     unit_references = t["UnitXReference"].join(t["reference"], "reference_id")
 
-    # J4-J6: subnation distribution chain (keep both key spellings)
-    dist = t["UnitXSubnation"]
-    dist = dist.join(
-        F.broadcast(t["d_curr_presence_absence"]),
-        dist["d_curr_presence_absence_id"] == t["d_curr_presence_absence"]["D_CURR_PRESENCE_ABSENCE_ID"],
-    )
-    dist = dist.join(
-        F.broadcast(t["d_dist_confidence"]),
-        dist["d_dist_confidence_id"] == t["d_dist_confidence"]["D_DIST_CONFIDENCE_ID"],
-    )
-    nvcs_distribution = dist.join(F.broadcast(t["d_subnation"]), "subnation_id")
+    # J4-J9: each bridge ⋈ its code dims, as (dim, fact key, dim key);
+    # a dim key keeps both spellings
+    def decoded(bridge: str, *dims: tuple[str, str, str | None]) -> DataFrame:
+        out = t[bridge]
+        for dim, fact_key, dim_key in dims:
+            out = decode_dimension(out, t[dim], fact_key, dim_key, how="inner")
+        return out
 
-    # J7-J8: 1994 ecoregions
-    eco94 = t["UnitXEcoregionUsfs1994"]
-    eco94 = eco94.join(
-        F.broadcast(t["d_usfs_ecoregion1994"]),
-        eco94["usfs_ecoregion_id"] == t["d_usfs_ecoregion1994"]["USFS_ECOREGION_ID"],
+    occurrence = ("d_occurrence_status", "d_occurrence_status_id", "D_OCCURRENCE_STATUS_ID")
+    nvcs_distribution = decoded(
+        "UnitXSubnation",
+        ("d_curr_presence_absence", "d_curr_presence_absence_id", "D_CURR_PRESENCE_ABSENCE_ID"),
+        ("d_dist_confidence", "d_dist_confidence_id", "D_DIST_CONFIDENCE_ID"),
+        ("d_subnation", "subnation_id", None),
     )
-    eco94 = eco94.join(
-        F.broadcast(t["d_occurrence_status"]),
-        eco94["d_occurrence_status_id"] == t["d_occurrence_status"]["D_OCCURRENCE_STATUS_ID"],
+    eco94 = decoded(
+        "UnitXEcoregionUsfs1994", ("d_usfs_ecoregion1994", "usfs_ecoregion_id", "USFS_ECOREGION_ID"), occurrence
     )
-
-    # J9: 2007 ecoregions (same-named key + occurrence dim)
-    eco07 = t["UnitXEcoregionUsfs2007"].join(
-        F.broadcast(t["d_usfs_ecoregion2007"]), "usfs_ecoregion_2007_id"
-    )
-    eco07 = eco07.join(
-        F.broadcast(t["d_occurrence_status"]),
-        eco07["d_occurrence_status_id"] == t["d_occurrence_status"]["D_OCCURRENCE_STATUS_ID"],
-    )
+    eco07 = decoded("UnitXEcoregionUsfs2007", ("d_usfs_ecoregion2007", "usfs_ecoregion_2007_id", None), occurrence)
 
     return {
         "nvcsUnits": nvcs_units,

@@ -4,9 +4,9 @@ The reference logs one change event per row per stage through a
 harness callback (usnvc.py:24-28, 55-57, 74-77) and sends each
 document through a draft-07-validated sink (README.md:35-45). The
 Spark equivalents: per-change-type accumulators (cheap cluster-wide
-counters), an events side-DataFrame written alongside the output, and
-a final-select validation with a quarantine channel instead of a
-per-row schema validator.
+counters; ``write_documents`` feeds ``documents_written``) in place of
+the per-row event log, and a final-select validation with a
+quarantine channel instead of a per-row schema validator.
 """
 
 from __future__ import annotations
@@ -29,25 +29,6 @@ class ChangeLedger:
 
     def counts(self) -> dict[str, int]:
         return {k: v.value for k, v in self._counters.items()}
-
-
-def change_events(
-    docs: DataFrame,
-    change_name: str,
-    change_desc: str,
-    fn: str,
-    id_col: str = "row_id",
-) -> DataFrame:
-    """One ledger event per document, mirroring the reference's
-    log_change_event(change_id, name, desc, fn, source, result)."""
-    return docs.select(
-        F.col(id_col).alias("change_id"),
-        F.lit(change_name).alias("change_name"),
-        F.lit(change_desc).alias("change_desc"),
-        F.lit(fn).alias("fn"),
-        F.lit("usnvc_source").alias("source"),
-        F.lit("document_emitted").alias("result"),
-    )
 
 
 def _envelope_line():

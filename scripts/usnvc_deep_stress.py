@@ -5,8 +5,8 @@ The real export is 8 levels deep with ~8.5k units; the 50k-unit demo
 (usnvc_scale_demo.py) widens but keeps the 8-ary shallow shape. This
 stress goes DEEP and WIDE at once — a D-level F-ary tree (defaults:
 depth 12, fan-out 3 -> 265,720 units) with one adversarial hot
-parent carrying an extra 5,000 direct children (the children_agg /
-nesting skew case) — and ASSERTS the hierarchy family's scale
+parent carrying an extra 5,000 direct children (the child-nest
+skew case) — and ASSERTS the hierarchy family's scale
 invariants instead of just timing them:
 
   1. closure shape: the ancestor closure reaches exactly depth-1
@@ -62,7 +62,7 @@ def generate_deep_export(
                 nxt_id += 1
         frontier = new
     # adversarial hot parent: the FIRST level-1 node gets `hot_children`
-    # extra leaves (children_agg skew + the widest nested doc)
+    # extra leaves (child-nest skew + the widest nested doc)
     hot = nodes[1][0]
     for _ in range(hot_children):
         nodes.append((nxt_id, hot, 2))

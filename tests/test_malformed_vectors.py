@@ -14,7 +14,11 @@ raise a named error, never return a silently different answer:
 - the LSH bucketers (``_table_bucket_ids``, ``_exact_probe_buckets``):
   a null or wrong-length row gets no bucket, and a component with no
   int64 fixed-point value raises MalformedInputError where the SQL twin
-  ``lsh_buckets_sql`` raises a conversion error.
+  ``lsh_buckets_sql`` raises a conversion error;
+- the quantized Gram kernel (``gram_matrix_quantized``, q362's path):
+  a null row drops as in q362's SQL, and a ragged batch or a component
+  without an int64 value whose products fit int64 raises
+  MalformedInputError.
 """
 
 from __future__ import annotations
@@ -35,7 +39,7 @@ from pipeline_usnvc_spark.operators.similarity import (
     embedding_near_dup_lsh,
     lsh_buckets_sql,
 )
-from pipeline_usnvc_spark.plans import QUERIES
+from pipeline_usnvc_spark.plans import ORACLES, QUERIES
 
 NAN, INF = float("nan"), float("inf")
 K = 3
@@ -281,3 +285,54 @@ def test_q437_lloyd_pass_rejects_null_components(spark, tmp_path, bad):
     ).write.parquet(f"{tmp_path}/embeddings.parquet")
     with pytest.raises(Exception, match="MalformedInputError"):
         QUERIES["q437_integer_kmeans_probe"](spark, str(tmp_path)).collect()
+
+
+GRAM_BAD_ROWS = {
+    "nan_component": [0.9, NAN, 0.0, 0.0],
+    "pos_inf": [0.0, INF, 0.0, 0.0],
+    "neg_inf": [-INF, 0.8, 0.2, 0.0],
+    "null_component": [0.5, None, 0.1, 0.2],
+    "ragged_row": [1.0, 0.0, 0.0],
+    # q = 1e10 fits int64 but q·q does not
+    "oversized": [1e3, 0.0, 0.0, 0.0],
+    # q = 1e19 has no int64 value at all
+    "no_int64": [1e12, 0.0, 0.0, 0.0],
+}
+
+
+def _gram_case(spark, tmp_path, bad):
+    """BASE plus one extra row (vec_id 9) as ``embeddings.parquet``:
+    the q362 spark result and a DuckDB runner for its oracle."""
+    rows = [(i, lab, v) for i, lab, v in BASE] + [(9, 0, bad)]
+    spark.createDataFrame(rows, "vec_id bigint, label int, embedding array<double>").coalesce(1).write.parquet(
+        f"{tmp_path}/embeddings.parquet"
+    )
+
+    def oracle():
+        import duckdb
+
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{tmp_path}/embeddings.parquet/*.parquet')")
+        return con.execute(ORACLES["q362_gram_matrix"]).fetchdf()
+
+    return lambda: QUERIES["q362_gram_matrix"](spark, str(tmp_path)), oracle
+
+
+def test_gram_matrix_drops_null_rows_like_sql(spark, tmp_path):
+    from tests.oracle_compare import assert_frames_match
+
+    q362, oracle = _gram_case(spark, tmp_path, None)
+    assert_frames_match(q362().toPandas(), oracle(), "q362 with a null row")
+
+
+@pytest.mark.parametrize("name", list(GRAM_BAD_ROWS))
+def test_gram_matrix_rejects_malformed_rows(spark, tmp_path, name):
+    q362, oracle = _gram_case(spark, tmp_path, GRAM_BAD_ROWS[name])
+    with pytest.raises(Exception, match="MalformedInputError"):
+        q362().collect()
+    if name in ("nan_component", "pos_inf", "neg_inf", "no_int64"):
+        # the SQL twin has no BIGINT for the component either
+        import duckdb
+
+        with pytest.raises(duckdb.ConversionException):
+            oracle()

@@ -820,7 +820,6 @@ _BROADCAST_ALLOWLIST = {
         "best0",  # top-1 pair slice
         "clamp",  # scalar seed-violation aggregate
         "factors", "quotas",  # per-source frames
-        "llr",  # 256-bucket LLR model
         "n", "n_total", "tot", "totals",  # scalar aggregates
         "scored",  # scored.agg(count) — scalar aggregate
     },
@@ -836,11 +835,9 @@ _BROADCAST_ALLOWLIST = {
         "lags",  # 4-row lag spine
         "n", "stats", "tot", "wm",  # scalar / per-type aggregates
     },
-    "flagship.py": {"nation", "region"},  # fixed dims (25 / 5 rows)
     "inference_queries.py": {
         "tot",        # scalar aggregate (one row)
         "nxt",        # frequency-of-frequencies spine
-        "lowest",     # 10 smallest observed frequencies
         "vals",       # distinct value domain (bounded: n_chars lengths)
         "n",          # nation dim
         "nn",         # nation dim
@@ -974,16 +971,16 @@ _BROADCAST_ALLOWLIST = {
 # or by documented contract. star_join deliberately has NO entry: its
 # callers pass SF-scaling tables and the hint was removed (round-10
 # review); decode_dimension's `dim` is contract-bound to tiny code
-# tables (its docstring states it).
+# tables (its docstring states it), and the USNVC d_* decodes and the
+# flagship's nation/region decode go through it.
 _PKG_BROADCAST_ALLOWLIST: dict[str, set[str]] = {
     "timeseries.py": {"bounds"},  # scalar min/max aggregate
     "skyline.py": {"carry"},  # #partitions-row carry frame
     "rank.py": {"offsets"},  # #partitions-row offsets table
     "layout.py": {"total"},  # scalar aggregate
     "joins.py": {"dim"},  # decode_dimension contract: bounded code dims only
-    "similarity.py": {"q", "q_tables", "qe"},  # query-grain eval frames (documented)
+    "similarity.py": {"q", "q_tables"},  # query-grain eval frames (documented)
     "pipeline.py": {"users", "ref_counts", "totals"},  # reference dim / bin lattice / event_type grain
-    "ingest.py": {"conf", "t"},  # USNVC d_* code tables (reference-bounded)
 }
 
 
@@ -993,48 +990,42 @@ def test_broadcast_targets_are_bounded_frames():
     100 TB. Enforce mechanically ACROSS EVERY plans file: each
     F.broadcast(...) target must be a reviewed bounded-grain frame
     name in the per-file allowlist above. Adding a new broadcast
-    means consciously extending the allowlist with a bounded frame."""
+    means consciously extending the allowlist with a bounded frame,
+    and removing one means pruning its entry: an entry that names no
+    live target would silently pre-approve a future hint."""
     import re
     from pathlib import Path
 
     plans_dir = (
         Path(__file__).resolve().parent.parent / "pipeline_usnvc_spark" / "plans"
     )
-    problems = []
-    for p in sorted(plans_dir.glob("*.py")):
-        src = p.read_text()
-        targets = {
-            m.group(1)
-            for m in re.finditer(
-                r"F\.broadcast\(\s*([A-Za-z_][A-Za-z0-9_]*|spark)", src
-            )
-        }
-        allowed = _BROADCAST_ALLOWLIST.get(p.name, set())
-        extra = targets - allowed
-        if extra:
-            problems.append(f"{p.name}: {sorted(extra)}")
     # The q10 lesson (round-10 review): a hint smuggled through an
     # operators/ helper evades a plans-only sweep — walk the whole
     # package, not just plans/.
-    pkg_dir = plans_dir.parent
-    for p in sorted(pkg_dir.rglob("*.py")):
-        if p.parent == plans_dir:
-            continue
-        src = p.read_text()
+    found: dict[bool, dict[str, set[str]]] = {True: {}, False: {}}
+    for p in sorted(plans_dir.parent.rglob("*.py")):
         targets = {
             m.group(1)
             for m in re.finditer(
-                r"F\.broadcast\(\s*([A-Za-z_][A-Za-z0-9_]*|spark)", src
+                r"F\.broadcast\(\s*([A-Za-z_][A-Za-z0-9_]*|spark)", p.read_text()
             )
         }
-        allowed = _PKG_BROADCAST_ALLOWLIST.get(p.name, set())
-        extra = targets - allowed
-        if extra:
-            problems.append(f"{p.relative_to(pkg_dir)}: {sorted(extra)}")
+        found[p.parent == plans_dir].setdefault(p.name, set()).update(targets)
+    problems = []
+    for in_plans, allowlist in ((True, _BROADCAST_ALLOWLIST), (False, _PKG_BROADCAST_ALLOWLIST)):
+        for name, targets in found[in_plans].items():
+            extra = targets - allowlist.get(name, set())
+            if extra:
+                problems.append(f"{name}: {sorted(extra)}")
+        for name, allowed in allowlist.items():
+            stale = allowed - found[in_plans].get(name, set())
+            if stale:
+                problems.append(f"{name}: stale allowlist entries {sorted(stale)}")
     assert not problems, (
         "unreviewed F.broadcast targets (verify each frame is bounded at "
         "100 TB — not data-grain or vocab-grain — then extend "
-        f"_BROADCAST_ALLOWLIST / _PKG_BROADCAST_ALLOWLIST): {problems}"
+        "_BROADCAST_ALLOWLIST / _PKG_BROADCAST_ALLOWLIST), or allowlist "
+        f"entries with no live F.broadcast target (prune them): {problems}"
     )
     # The specific regressions: never broadcast the vocab-grain tc, and
     # never re-hint the SF-scaling TPC-H tables.

@@ -183,6 +183,42 @@ _ROWS = st.lists(
 )
 
 
+# related rows (key, order, payload): few distinct order values, so
+# most keys hold ties that only the payload can break
+_RELATED = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=5),
+        st.integers(min_value=0, max_value=2),
+        st.one_of(st.none(), st.text(alphabet="abc", max_size=2)),
+    ),
+    max_size=40,
+)
+
+
+@settings(max_examples=10, deadline=None)
+@given(_RELATED, st.booleans())
+@example([], False)
+@example([(0, 1, "b"), (0, 1, "a"), (0, 0, None), (0, 1, None), (3, 2, "a")], True)
+def test_nest_records_orders_by_key_then_payload(spark, rows, column_key):
+    from pipeline_usnvc_spark.operators.nest import attach_nested
+
+    related = spark.createDataFrame(rows, "k bigint, o bigint, p string").repartition(3)
+    base = spark.createDataFrame([(k,) for k in range(8)], "k bigint")  # keys 6, 7: no rows
+    order_by = -F.col("o") if column_key else "o"
+    got = {r["k"]: r["records"] for r in attach_nested(base, related, "k", ["p", "o"], order_by).collect()}
+    assert set(got) == set(range(8))
+    for k in range(8):
+        # (order, payload) ascending; a null payload field sorts first
+        want = sorted(
+            (r for r in rows if r[0] == k),
+            key=lambda r: (-r[1] if column_key else r[1], r[2] is not None, r[2] or "", r[1]),
+        )
+        if not want:
+            assert got[k] is None, k
+        else:
+            assert [(r["p"], r["o"]) for r in got[k]] == [(p, o) for _, o, p in want], k
+
+
 def _py_diff(old, new):
     o, n = dict(old), dict(new)
     out = {}

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import math
+import re
 import sys
 import types
 from pathlib import Path
@@ -33,6 +34,19 @@ def docs_by_id(spark, export_dir) -> dict[str, dict]:
     out = build_documents(silver, run_timestamp="2026-01-01T00:00:00")
     rows = out.collect()
     return {r["row_id"]: json.loads(r["source_data"]) for r in rows}
+
+
+
+def test_document_plan_collects_each_nest_once(spark, export_dir):
+    """Eight bridge nests, the ancestor nest, the child nest and the
+    synthetic root: one collect_list each, ids read off the records."""
+    from pipeline_usnvc_spark.usnvc.docs import build_documents
+    from pipeline_usnvc_spark.usnvc.ingest import build_silver, read_export
+
+    docs = build_documents(build_silver(read_export(spark, export_dir)), "2026-01-01T00:00:00")
+    plan = docs._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("collect_list(") == 11
+    assert len(re.findall(r"^\W*Aggregate \[", plan, re.M)) == 11
 
 
 UNIT_IDS = ["100", "110", "111", "112", "113", "114", "200", "210"]
