@@ -121,6 +121,10 @@ def curate(
     """End-to-end curation gate with a full audit trail: every input
     document labelled with the stage that dropped it (or ``kept``).
 
+    Output: ``(doc_id, source, drop_stage, n_tokens)``, one row per
+    input document; ``n_tokens`` is the bigint token count the quality
+    stage measured, so consumers need not tokenize the text again.
+
     Stages, in order — each runs only on the previous stage's
     survivors, so the expensive shingle self-join sees the
     post-exact-dedup corpus:
@@ -248,7 +252,7 @@ def curate(
         .select("doc_id", "rk")
     )
     flags = (
-        staged.select("doc_id", "source", "fp", "q_fail")
+        staged.select("doc_id", "source", "fp", "n_tokens", "q_fail")
         .join(keepers, "fp", "left")
         .join(near_dropped.withColumn("nd", F.lit(True)), "doc_id", "left")
         .join(quota_ranked, "doc_id", "left")
@@ -267,29 +271,6 @@ def curate(
         .when(F.col("rk").isNull(), F.lit("quota"))
         .otherwise(F.lit("kept"))
         .alias("drop_stage"),
+        "n_tokens",
     )
 
-
-def curate_observed(docs: DataFrame, **kwargs):
-    """``curate`` plus production observability: per-stage drop counts
-    collected via ``DataFrame.observe`` — the metrics ride the SAME
-    job as the output (no second action, no extra scan), the pattern
-    for pipeline health dashboards at scale.
-
-    Returns ``(df, observation)``; read ``observation.get`` AFTER an
-    action on ``df``.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation("curate")
-    stage_count = lambda s: F.count(F.when(F.col("drop_stage") == s, 1)).alias(s)
-    df = curate(docs, **kwargs).observe(
-        obs,
-        F.count(F.lit(1)).alias("total"),
-        stage_count("kept"),
-        stage_count("quality"),
-        stage_count("exact_dup"),
-        stage_count("near_dup"),
-        stage_count("quota"),
-    )
-    return df, obs

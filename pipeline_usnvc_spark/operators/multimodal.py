@@ -316,8 +316,9 @@ def encode_wav(samples: np.ndarray, sample_rate: int = 8000) -> bytes:
 def decode_wav(buf: bytes) -> tuple[np.ndarray, int]:
     """Minimal RIFF/WAVE reader (mono/stereo 16-bit PCM) → (samples
     int16 [n] or [n, ch], sample_rate). Walks the chunk list properly
-    (fmt/data may be preceded by LIST/fact chunks); fails fast on
-    non-PCM or missing chunks."""
+    (fmt/data may be preceded by LIST/fact chunks); raises ValueError
+    on non-PCM, missing or truncated chunks and on impossible fmt
+    fields (zero channels or sample rate, ``data`` not whole frames)."""
     import struct
 
     if len(buf) < 12 or buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
@@ -325,8 +326,14 @@ def decode_wav(buf: bytes) -> tuple[np.ndarray, int]:
     pos, fmt, data = 12, None, None
     while pos + 8 <= len(buf):
         cid, size = buf[pos : pos + 4], struct.unpack("<I", buf[pos + 4 : pos + 8])[0]
+        if pos + 8 + size > len(buf):
+            raise ValueError(
+                f"WAV {cid!r} chunk truncated: need {size} bytes, have {len(buf) - pos - 8}"
+            )
         body = buf[pos + 8 : pos + 8 + size]
         if cid == b"fmt ":
+            if size < 16:
+                raise ValueError(f"WAV fmt chunk truncated: {size} of 16 bytes")
             fmt = struct.unpack("<HHIIHH", body[:16])
         elif cid == b"data":
             data = body
@@ -336,6 +343,10 @@ def decode_wav(buf: bytes) -> tuple[np.ndarray, int]:
     audio_format, n_channels, sample_rate, _, _, bits = fmt
     if audio_format != 1 or bits != 16:
         raise ValueError(f"only 16-bit PCM supported (format={audio_format}, bits={bits})")
+    if n_channels == 0 or sample_rate == 0:
+        raise ValueError(f"WAV fmt has channels={n_channels}, sample_rate={sample_rate}")
+    if len(data) % (2 * n_channels):
+        raise ValueError(f"WAV data of {len(data)} bytes is not whole {n_channels}-channel frames")
     samples = np.frombuffer(data, dtype="<i2")
     if n_channels > 1:
         samples = samples.reshape(-1, n_channels)

@@ -12,28 +12,37 @@ curation gate, q187 decontamination, q197 shard packing), so the
 composition inherits their correctness; what this module adds is the
 wiring, the writer layout, and the manifest a training job consumes.
 
-Scale posture: no stage introduces a new shuffle class — curate's
-audit is reused for the manifest via one groupBy; the split is one
-shingle-keyed semi-join; packing is the two-phase global rank; the
-writer partitions by (split, shard) so a 1000-executor run writes
-all shards concurrently.
+Scale posture: no stage introduces a new shuffle class, and the
+manifest has no job of its own. Every token count is computed once,
+by curate; the per-stage, split and shard counts are Observations on
+two checkpoint jobs whose output the pipeline reads (the curation
+audit and the labelled frame). The split is one shingle-keyed
+semi-join; packing is the two-phase global rank; the writer partitions
+by (split, shard) so a 1000-executor run writes all shards
+concurrently.
 """
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from pipeline_usnvc_spark.functions.text import (
-    doc_fingerprint,
-    token_count,
-    tokens,
-    word_shingles,
-)
+from pipeline_usnvc_spark.functions.text import doc_fingerprint, tokens, word_shingles
+from pipeline_usnvc_spark.operators.checkpoint import materialize
 from pipeline_usnvc_spark.operators.dedup_pipeline import curate
 from pipeline_usnvc_spark.operators.rank import with_global_rank
+
+_STAGES = ("quality", "exact_dup", "near_dup", "quota", "kept")
+_SPLITS = ("train", "eval", "dropped_contaminated")
+
+
+def _split_bucket(text_col: str) -> Column:
+    """Deterministic split bucket in [0, 100): md5 of the normalized
+    document fingerprint (the q187 expression)."""
+    digest = F.substring(F.md5(doc_fingerprint(text_col)), 1, 8)
+    return F.conv(digest, 16, 10).cast("bigint") % 100
 
 
 def decontaminated_split(
@@ -50,20 +59,11 @@ def decontaminated_split(
     transform as a reusable operator — one shingle-keyed semi-join,
     no pairwise work). Production uses n=13; the plan is identical.
 
-    ``bucket_col`` names a PRECOMPUTED md5-fingerprint bucket column
-    (the exact expression below) — callers that already paid the
-    tokenize + fingerprint map pass (label_and_shard's kept frame)
-    pass it so the split does not re-run it over the full text."""
-    bucket = (
-        F.col(bucket_col)
-        if bucket_col
-        else (
-            F.conv(
-                F.substring(F.md5(doc_fingerprint(text_col)), 1, 8), 16, 10
-            ).cast("bigint")
-            % 100
-        )
-    )
+    ``bucket_col`` names a PRECOMPUTED ``_split_bucket`` column —
+    callers that already paid the fingerprint map pass
+    (label_and_shard's kept frame) pass it so the split does not
+    re-run it over the full text."""
+    bucket = F.col(bucket_col) if bucket_col else _split_bucket(text_col)
     bucketed = docs.select(F.col(id_col), F.col(text_col), bucket.alias("bucket"))
     sh = bucketed.select(
         id_col,
@@ -96,23 +96,22 @@ def decontaminated_split(
 
 def label_and_shard(
     docs: DataFrame,
+    audit: DataFrame,
     n_shards: int = 8,
     eval_pct: int = 20,
-    audit: DataFrame | None = None,
     include_text: bool = True,
-    **curate_kwargs,
 ) -> DataFrame:
     """The pipeline's logical plan without the writer: every KEPT
     document labelled (doc_id, text, source, n_tokens, split, shard)
     — shard assigned only to train rows (token-balanced round-robin
     via the two-phase global rank), null for eval/contaminated.
     SQL-expressible end-to-end, so q206 oracle-verifies this exact
-    composition. Pass a precomputed ``audit`` to avoid re-running the
-    curation gate when the caller already has it.
+    composition. ``audit`` is ``curate(docs, ...)``: the caller picks
+    the curation settings, and ``n_tokens`` comes from it.
 
     ``include_text=False`` drops the text column from the output (same
-    rows, same remaining columns): metadata-only consumers (q206, the
-    manifest stats) skip the final text re-attachment join entirely.
+    rows, same remaining columns): metadata-only consumers (q206) skip
+    the final text re-attachment join entirely.
 
     r14 reshape (guide §2.3 — shuffle keys and metadata, not
     payloads): the rank/union spine runs on a ~40 B/row doc-grain
@@ -122,40 +121,30 @@ def label_and_shard(
     (doc_id, n_tokens). Text is now stored once (kept) and re-attached
     to the decided rows by ONE doc_id join (doc_id is the established
     PK of documents — the join is row-preserving)."""
-    if audit is None:
-        audit = curate(docs, **curate_kwargs)
     # NOTE (ADVICE r05): materialize() is an EAGER localCheckpoint, so
     # building this plan triggers Spark jobs and pins blocks for the
-    # session. That is deliberate — every runtime consumer (q206, the
-    # manifest writer, bench) needs the cut or the curation gate
+    # session. That is deliberate — every runtime consumer (q206,
+    # prepare_training_data, bench) needs the cut or the curation gate
     # re-executes up to 4x. Plan-shape-only consumers (EXPLAIN
     # tooling, plan tests) use the repo's stub-materialize convention
     # instead: monkeypatch operators.checkpoint.materialize to
     # identity (see tests/test_plans.py), paying zero execution.
-    from pipeline_usnvc_spark.operators.checkpoint import materialize
-
+    #
     # kept feeds the decontamination split (shingle explode), the slim
     # metadata spine, and the final text join: one checkpoint stops
     # the multi-stage curation gate from re-executing for each
-    # consumer. The split bucket (md5 of the doc fingerprint) is
-    # computed HERE, in the same map pass that already tokenizes for
-    # n_tokens — decontaminated_split reads it instead of re-running
-    # tokenize + fingerprint over the full text.
-    bucket = (
-        F.conv(F.substring(F.md5(doc_fingerprint("text")), 1, 8), 16, 10).cast(
-            "bigint"
-        )
-        % 100
-    )
+    # consumer. The split bucket is computed HERE, in the one map pass
+    # over kept text — decontaminated_split reads it instead of
+    # re-running the fingerprint over the full text.
     kept = materialize(
-        docs.join(audit.select("doc_id", "drop_stage"), "doc_id")
+        docs.join(audit.select("doc_id", "drop_stage", "n_tokens"), "doc_id")
         .filter(F.col("drop_stage") == "kept")
         .select(
             "doc_id",
             "text",
             "source",
-            token_count("text").alias("n_tokens"),
-            bucket.alias("_bucket"),
+            "n_tokens",
+            _split_bucket("text").alias("_bucket"),
         )
     )
     split = decontaminated_split(kept, eval_pct=eval_pct, bucket_col="_bucket")
@@ -200,25 +189,26 @@ def prepare_training_data(
     Returns the manifest dict. Deterministic end-to-end (md5 orders,
     no RNG): re-running on the same input writes identical content.
     """
-    audit = curate(docs, **curate_kwargs)
-
-    sized = docs.join(audit.select("doc_id", "drop_stage"), "doc_id").select(
-        "doc_id", "text", "source", token_count("text").alias("n_tokens"), "drop_stage"
-    )
-    # One pass for the per-stage accounting (docs + tokens).
-    stage_stats = {
-        r["drop_stage"]: {"docs": r["docs"], "tokens": r["tokens"]}
-        for r in sized.groupBy("drop_stage")
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum("n_tokens").cast("long").alias("tokens"),
+    # The per-stage docs and tokens ride the audit's checkpoint job.
+    stage_obs = Observation("stages")
+    audit = materialize(
+        curate(docs, **curate_kwargs).observe(
+            stage_obs, *_docs_and_tokens("drop_stage", _STAGES)
         )
-        .collect()  # bounded: |curation stages| rows
-    }
-
-    labelled = label_and_shard(
-        docs, n_shards=n_shards, eval_pct=eval_pct, audit=audit, **curate_kwargs
-    ).localCheckpoint()  # two writes + two stat passes below reuse one run
+    )
+    # The split and shard counts ride the labelled checkpoint job. The
+    # split counts cannot come from the writes: dropped_contaminated
+    # rows are never written.
+    label_obs = Observation("labels")
+    labelled = (
+        label_and_shard(docs, audit, n_shards=n_shards, eval_pct=eval_pct)
+        .observe(
+            label_obs,
+            *(F.count(F.when(F.col("split") == s, 1)).alias(s) for s in _SPLITS),
+            *_docs_and_tokens("shard", range(n_shards)),
+        )
+        .localCheckpoint()  # two writes reuse one run
+    )
 
     sharded = labelled.filter(F.col("split") == "train").drop("split")
     evald = labelled.filter(F.col("split") == "eval").drop("split", "shard")
@@ -226,18 +216,10 @@ def prepare_training_data(
     sharded.write.partitionBy("shard").mode("overwrite").parquet(f"{out_dir}/train")
     evald.write.mode("overwrite").parquet(f"{out_dir}/eval")
 
-    # bounded: n_shards rows
-    shard_stats = {
-        int(r["shard"]): {"docs": r["docs"], "tokens": r["tokens"]}
-        for r in sharded.groupBy("shard")
-        .agg(F.count("*").alias("docs"), F.sum("n_tokens").cast("long").alias("tokens"))
-        .collect()
-    }
-    # bounded: 2 split rows
-    split_stats = {
-        r["split"]: r["n"]
-        for r in labelled.groupBy("split").agg(F.count("*").alias("n")).collect()
-    }
+    stages, labels = stage_obs.get, label_obs.get
+    stage_stats = _docs_and_tokens_stats(stages, _STAGES)
+    shard_stats = _docs_and_tokens_stats(labels, range(n_shards))
+    split_stats = {s: labels[s] for s in _SPLITS if labels[s] > 0}
 
     manifest = {
         "input_docs": sum(v["docs"] for v in stage_stats.values()),
@@ -254,6 +236,29 @@ def prepare_training_data(
         json.dumps(manifest, indent=2, sort_keys=True),
     )
     return manifest
+
+
+def _docs_and_tokens(key_col: str, keys) -> list[Column]:
+    """Observed metrics per key of ``key_col``: its row count
+    ``docs_<key>`` and its ``n_tokens`` sum ``tokens_<key>``."""
+    return [
+        agg
+        for k in keys
+        for agg in (
+            F.count(F.when(F.col(key_col) == k, 1)).alias(f"docs_{k}"),
+            F.sum(F.when(F.col(key_col) == k, F.col("n_tokens"))).alias(f"tokens_{k}"),
+        )
+    ]
+
+
+def _docs_and_tokens_stats(metrics: dict, keys) -> dict:
+    """``{key: {"docs", "tokens"}}`` for every key with a row, as a
+    ``groupBy(key)`` gives it (a NULL sum stays None)."""
+    return {
+        k: {"docs": metrics[f"docs_{k}"], "tokens": metrics[f"tokens_{k}"]}
+        for k in keys
+        if metrics[f"docs_{k}"] > 0
+    }
 
 
 def _write_text(spark, path: str, content: str) -> None:

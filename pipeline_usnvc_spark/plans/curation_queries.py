@@ -964,7 +964,7 @@ def q174_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents"),
         jaccard_threshold=_CURATE_JACCARD,
         quota=_CURATE_QUOTA,
-    )
+    ).select("doc_id", "source", "drop_stage")
 
 
 # ---------------------------------------------------------------------------
@@ -1350,11 +1350,8 @@ def q178_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q187_decontaminated_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(doc_fingerprint("text")), 1, 8), 16, 10).cast("bigint")
-        % 100
-    )
+    from pipeline_usnvc_spark.pipelines.prepare import decontaminated_split
+
     # Examined r13, left alone: the fingerprint + shingle-explode map
     # pass executes once per consumer (eval_sh / contaminated subtrees
     # specialize differently, so no exchange reuse), but the duplicate
@@ -1363,39 +1360,15 @@ def q187_decontaminated_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured SLOWER (interleaved A/B 1.9-2.2 s plain vs 2.7-2.8 s
     # spread). A shingle-grain checkpoint is corpus-sized at 100 TB —
     # the wrong trade (same reasoning as curate's staged frame).
-    bucketed = docs.select("doc_id", "text", bucket.alias("bucket"))
-    sh = bucketed.select(
-        "doc_id",
-        "bucket",
-        F.explode(F.array_distinct(word_shingles(tokens("text")))).alias("shingle"),
-    )
-    eval_sh = sh.filter(F.col("bucket") >= 80).select("shingle").distinct()
-    contaminated = (
-        sh.filter(F.col("bucket") < 80)
-        .join(eval_sh, "shingle", "left_semi")
-        .select("doc_id")
-        .distinct()
-        .withColumn("_c", F.lit(True))
-    )
-    return (
-        bucketed.select("doc_id", "bucket")
-        .join(contaminated, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("bucket") >= 80, F.lit("eval"))
-            .when(F.col("_c").isNotNull(), F.lit("dropped_contaminated"))
-            .otherwise(F.lit("train"))
-            .alias("split"),
-        )
-    )
+    return decontaminated_split(load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
 # q188 — token-budget accounting: how many documents AND tokens each
 # curation stage removes, and what survives for training — the number
 # a pretraining run is actually planned around (token budget, not doc
-# count). One join of the q174 audit back onto per-doc token counts +
-# one groupBy; oracle embeds the q174 SQL, so the report is
+# count). One groupBy of the q174 audit, which carries each document's
+# token count; oracle embeds the q174 SQL, so the report is
 # oracle-exact end-to-end.
 # ---------------------------------------------------------------------------
 @query(
@@ -1419,9 +1392,7 @@ def q188_token_budget_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     audit = curate(docs, jaccard_threshold=_CURATE_JACCARD, quota=_CURATE_QUOTA)
-    toks = docs.select("doc_id", token_count("text").alias("n_tokens"))
-    joined = audit.join(toks, "doc_id")
-    per_stage = joined.groupBy("drop_stage").agg(
+    per_stage = audit.groupBy("drop_stage").agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum("n_tokens").cast("bigint").alias("n_tokens"),
     )
@@ -1639,16 +1610,16 @@ def _q206_oracle() -> str:
 
 @query("q206_prepare_corpus", oracle=_q206_oracle())
 def q206_prepare_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pipeline_usnvc_spark.operators.dedup_pipeline import curate
     from pipeline_usnvc_spark.pipelines.prepare import label_and_shard
 
     docs = load_table(spark, sf_dir, "documents")
     return label_and_shard(
         docs,
+        curate(docs, jaccard_threshold=_CURATE_JACCARD, quota=_CURATE_QUOTA),
         n_shards=4,
         eval_pct=20,
         include_text=False,  # metadata-only output: skip the text join
-        jaccard_threshold=_CURATE_JACCARD,
-        quota=_CURATE_QUOTA,
     ).select("doc_id", "split", "n_tokens", "shard")
 
 

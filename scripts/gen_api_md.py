@@ -1,13 +1,13 @@
 #!/usr/bin/env python
 """Regenerate API.md: one line per public callable, first docstring
-line as the summary. Run from the repo root."""
+line as the summary. ``render()`` returns the text, so a test can
+check that the committed API.md is current."""
 import importlib
 import inspect
 import os
 import sys
 
-os.chdir(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, ".")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 MODS = [
     "pipeline_usnvc_spark.functions.text",
@@ -41,7 +41,8 @@ MODS = [
 ]
 
 
-def main() -> None:
+def render() -> str:
+    """The text of API.md for the code as it is now."""
     lines = [
         "# API — public operator surface",
         "",
@@ -70,9 +71,15 @@ def main() -> None:
             entries.append(f"- `{name}{sig}` — {doc}")
         if entries:
             lines += [f"## {m.split('pipeline_usnvc_spark.')[-1]}", "", *entries, ""]
-    with open("API.md", "w") as f:
-        f.write("\n".join(lines))
-    print(f"API.md regenerated ({len(lines)} lines)")
+    return "\n".join(lines)
+
+
+def main() -> None:
+    sys.path.insert(0, REPO)
+    text = render()
+    with open(os.path.join(REPO, "API.md"), "w") as f:
+        f.write(text)
+    print(f"API.md regenerated ({len(text.splitlines())} lines)")
 
 
 if __name__ == "__main__":

@@ -280,3 +280,21 @@ def test_scripts_hold_no_round_named_harness():
     pattern = re.compile(r"^scale_round|_r\d+\.py$|^ab_r\d+_")
     named = sorted(p.name for p in scripts.iterdir() if pattern.search(p.name))
     assert not named, f"round-named scripts in scripts/: {named}"
+
+
+def test_api_md_matches_generator():
+    """API.md is generated (scripts/gen_api_md.py): a public signature
+    or docstring summary that changes without regenerating it fails
+    here."""
+    import importlib.util
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    spec = importlib.util.spec_from_file_location(
+        "gen_api_md", repo / "scripts" / "gen_api_md.py"
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    assert (repo / "API.md").read_text() == gen.render(), (
+        "API.md is stale: run python scripts/gen_api_md.py"
+    )

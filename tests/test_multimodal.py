@@ -377,6 +377,56 @@ def test_wav_roundtrip_and_dominant_frequency(spark):
         decode_wav(b"nope")
 
 
+def _wav_bytes(pcm: bytes, n_channels: int = 1, rate: int = 8000) -> bytes:
+    """A 16-bit PCM RIFF/WAVE payload with free fmt fields."""
+    import struct
+
+    align = 2 * max(n_channels, 1)
+    fmt = struct.pack("<HHIIHH", 1, n_channels, rate, rate * align, align, 16)
+    body = b"fmt " + struct.pack("<I", 16) + fmt + b"data" + struct.pack("<I", len(pcm)) + pcm
+    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
+
+
+@pytest.mark.parametrize(
+    "case, match",
+    [
+        ("truncated", "truncated"),
+        ("sample_rate_0", "sample_rate=0"),
+        ("channels_0", "channels=0"),
+        ("odd_length", "whole"),
+        ("partial_frame", "whole"),
+        ("short_fmt", "fmt chunk truncated"),
+    ],
+)
+def test_decode_wav_rejects_malformed_payloads(case, match):
+    """A WAV decode either returns every declared sample or raises: a
+    data chunk running past the buffer, a zero sample rate or channel
+    count, a fmt chunk under 16 bytes, and data that is not whole
+    frames are ValueErrors, never a short array or a later
+    ZeroDivisionError."""
+    import struct
+
+    import numpy as np
+
+    from pipeline_usnvc_spark.operators.multimodal import decode_wav, encode_wav
+
+    pcm = np.arange(1000, dtype=np.int16).tobytes()
+    buf = {
+        "truncated": encode_wav(np.arange(1000, dtype=np.int16))[:-400],
+        "sample_rate_0": _wav_bytes(pcm, rate=0),
+        "channels_0": _wav_bytes(pcm, n_channels=0),
+        "odd_length": _wav_bytes(pcm[:-1]),
+        "partial_frame": _wav_bytes(pcm[:-2], n_channels=2),
+        "short_fmt": b"RIFF" + struct.pack("<I", 16) + b"WAVEfmt "
+        + struct.pack("<I", 4) + b"\x01\x00\x01\x00",
+    }[case]
+    with pytest.raises(ValueError, match=match):
+        decode_wav(buf)
+    # the well-formed neighbours still decode
+    assert len(decode_wav(_wav_bytes(pcm))[0]) == 1000
+    assert decode_wav(_wav_bytes(pcm, n_channels=2))[0].shape == (500, 2)
+
+
 def test_audio_features_pipeline(spark, sf_dir):
     """q209: every synthesized doc yields real decoded features; the
     dominant frequency matches the synthesis formula per doc."""

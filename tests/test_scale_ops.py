@@ -472,21 +472,6 @@ def test_curate_exercises_every_stage(spark):
     assert len(out) == len(rows)
 
 
-def test_curate_observed_metrics_match_output(spark, sf_dir):
-    """observe() metrics ride the output job itself — and agree with
-    an independent groupBy of the result."""
-    from pipeline_usnvc_spark.operators.dedup_pipeline import curate_observed
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    df, obs = curate_observed(docs)
-    truth = {r["drop_stage"]: r["n"] for r in
-             df.groupBy("drop_stage").agg(F.count("*").alias("n")).collect()}
-    m = obs.get
-    assert m["total"] == sum(truth.values())
-    for stage in ("kept", "quality", "exact_dup", "near_dup", "quota"):
-        assert m[stage] == truth.get(stage, 0), stage
-
-
 def test_grouped_topk_equals_plain_window(spark):
     """Two-stage salted top-k == single-window top-k on a skewed
     fixture (one group holds 90% of rows)."""
