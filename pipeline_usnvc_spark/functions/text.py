@@ -1,4 +1,4 @@
-"""Text expressions — all native Column expressions (zero Python UDFs).
+"""Text expressions — all native Catalyst expressions (zero Python UDFs).
 
 Everything here stays inside whole-stage codegen: the reference's
 row-wise Python helpers (clean_string at reference usnvc/usnvc.py:493-497,
@@ -6,6 +6,12 @@ display-title branch at usnvc.py:324-332, nation-code split at
 usnvc.py:355-366) are re-expressed as Catalyst expressions, and the
 LLM-pipeline text analyzers (token count, language ID, quality score,
 fingerprint) follow the same rule so they vectorize on a 100 TB corpus.
+
+The three reference helpers return SQL expression text, not Columns:
+the USNVC documents apply a whole stage's projection as one text
+(``selectExpr``/``F.expr``), one py4j call where a Column tree costs
+several per node. ``ident`` and ``sql_string`` quote names and
+literals for such texts.
 """
 
 from __future__ import annotations
@@ -48,29 +54,47 @@ def doc_score_micro() -> Column:
     ).cast("bigint")
 
 
-def clean_string(c: Column | str) -> Column:
-    """Unescape the three HTML entities the reference handles.
+def ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier.
+
+    Expression texts quote every column they name, so a name with
+    spaces or a case-only twin (the USNVC export pins
+    ``spark.sql.caseSensitive``) resolves exactly."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(s: str) -> str:
+    """``s`` as a SQL string literal, whatever the escaping setting.
+
+    It parses to ``s`` under either setting of
+    ``spark.sql.parser.escapedStringLiterals``: a value holding a quote
+    or a backslash is spelled as its UTF-8 bytes."""
+    if "'" in s or "\\" in s:
+        return f"decode(X'{s.encode('utf-8').hex()}', 'UTF-8')"
+    return f"'{s}'"
+
+
+def clean_string(c: str) -> str:
+    """SQL text unescaping the reference's three HTML entities in ``c``.
 
     Reference parity: usnvc/usnvc.py:493-497 replaces exactly
     ``&amp; &lt; &gt;`` (in that order — ``&amp;lt;`` therefore becomes
     ``<`` after two passes there; chained ``regexp_replace`` reproduces
     the same order-dependent behavior).
     """
-    c = F.col(c) if isinstance(c, str) else c
-    out = F.regexp_replace(c, "&amp;", "&")
-    out = F.regexp_replace(out, "&lt;", "<")
-    out = F.regexp_replace(out, "&gt;", ">")
-    return out
+    for entity, char in (("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">")):
+        c = f"regexp_replace({c}, '{entity}', '{char}')"
+    return c
 
 
 def display_title(
-    hierarchylevel: Column,
-    classificationcode: Column,
-    colloquialname: Column,
-    translatedname: Column,
-    databasecode: Column,
-) -> Column:
-    """Three-way CASE building a unit display title.
+    hierarchylevel: str,
+    classificationcode: str,
+    colloquialname: str,
+    translatedname: str,
+    databasecode: str,
+) -> str:
+    """SQL text of the three-way CASE that builds a unit display title.
 
     Reference parity: usnvc/usnvc.py:324-332 (duplicated at 519-527).
     Upper levels: code + colloquialname + level; Macrogroup/Group:
@@ -78,30 +102,28 @@ def display_title(
     ``concat`` (not concat_ws) matches pandas NaN propagation: any null
     component nulls the title (SURVEY §7.4.2).
     """
-    upper = F.concat(classificationcode, F.lit(" "), colloquialname, F.lit(" "), hierarchylevel)
-    mid = F.concat(classificationcode, F.lit(" "), translatedname)
-    low = F.concat(databasecode, F.lit(" "), translatedname)
+    upper = f"concat({classificationcode}, ' ', {colloquialname}, ' ', {hierarchylevel})"
+    mid = f"concat({classificationcode}, ' ', {translatedname})"
+    low = f"concat({databasecode}, ' ', {translatedname})"
     return (
-        F.when(hierarchylevel.isin("Class", "Subclass", "Formation", "Division"), upper)
-        .when(hierarchylevel.isin("Macrogroup", "Group"), mid)
-        .otherwise(low)
+        f"CASE WHEN {hierarchylevel} IN ('Class', 'Subclass', 'Formation', 'Division') THEN {upper}"
+        f" WHEN {hierarchylevel} IN ('Macrogroup', 'Group') THEN {mid} ELSE {low} END"
     )
 
 
-def split_flagged_codes(c: Column | str) -> Column:
-    """Split a comma list of codes where a trailing ``?`` flags uncertainty.
+def split_flagged_codes(c: str) -> str:
+    """SQL text splitting a comma list of codes; a trailing ``?`` flags uncertainty.
 
     Reference parity: usnvc/usnvc.py:355-366 — ``"US, CA?"`` →
     ``[{Abbreviation: US, Uncertainty: false}, {Abbreviation: CA, Uncertainty: true}]``.
-    Pure higher-order-function expression; no explode, no UDF.
+    Pure higher-order-function expression; no explode, no UDF. The
+    ``?`` pattern is the class ``[?]``, which needs no backslash and so
+    reads the same whatever the session's string-literal escaping.
     """
-    c = F.col(c) if isinstance(c, str) else c
-    return F.transform(
-        F.split(c, ","),
-        lambda tok: F.struct(
-            F.trim(F.regexp_replace(tok, r"\?", "")).alias("Abbreviation"),
-            F.trim(tok).endswith("?").alias("Uncertainty"),
-        ),
+    return (
+        f"transform(split({c}, ','), tok -> struct("
+        "trim(regexp_replace(tok, '[?]', '')) AS Abbreviation, "
+        "endswith(trim(tok), '?') AS Uncertainty))"
     )
 
 

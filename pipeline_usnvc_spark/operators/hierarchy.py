@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from pipeline_usnvc_spark.functions.text import ident
 from pipeline_usnvc_spark.operators.checkpoint import materialize
 
 
@@ -34,7 +35,7 @@ def _checkpoint_max_depth(df: DataFrame) -> tuple[DataFrame, int | None]:
     """Materialize ``df`` and return it with its maximum ``depth``
     (None when empty), observed during the checkpoint job itself."""
     obs = Observation()
-    df = materialize(df.observe(obs, F.max("depth").alias("max_depth")))
+    df = materialize(df.observe(obs, F.expr("max(depth) AS max_depth")))
     return df, obs.get["max_depth"]
 
 
@@ -56,10 +57,8 @@ def ancestors(
     trees and in cycles alike.
     """
     closure, deepest = _checkpoint_max_depth(
-        edges.filter(F.col(parent_col).isNotNull()).select(
-            F.col(id_col).alias("id"),
-            F.col(parent_col).alias("ancestor_id"),
-            F.lit(1).alias("depth"),
+        edges.filter(f"{ident(parent_col)} IS NOT NULL").selectExpr(
+            f"{ident(id_col)} AS id", f"{ident(parent_col)} AS ancestor_id", "1 AS depth"
         )
     )
     # `closure` holds every path of length <= reach; a longer path
@@ -68,15 +67,11 @@ def ancestors(
     while deepest is not None and deepest >= reach and reach < max_depth:
         span, reach = reach, 2 * reach
         grown = (
-            closure.filter(F.col("depth") == span)
+            closure.filter(f"depth = {span}")
             .alias("f")
-            .join(closure.alias("e"), F.col("f.ancestor_id") == F.col("e.id"))
-            .select(
-                F.col("f.id").alias("id"),
-                F.col("e.ancestor_id").alias("ancestor_id"),
-                (F.col("f.depth") + F.col("e.depth")).alias("depth"),
-            )
-            .filter(F.col("depth") <= max_depth)
+            .join(closure.alias("e"), F.expr("f.ancestor_id = e.id"))
+            .selectExpr("f.id AS id", "e.ancestor_id AS ancestor_id", "f.depth + e.depth AS depth")
+            .filter(f"depth <= {max_depth}")
         )
         # re-checkpoint the union: a self-join over a union of two
         # checkpoints fails analysis, and one frame keeps the next

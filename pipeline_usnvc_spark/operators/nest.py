@@ -16,31 +16,37 @@ sorts by ``order_by`` and breaks its ties on the payload itself
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pipeline_usnvc_spark.functions.text import ident
 
 
 def nest_records(
     df: DataFrame,
     key: str,
-    payload: list[Column] | list[str],
-    order_by: str | Column,
+    payload: list[str],
+    order_by: str,
     out_col: str = "records",
 ) -> DataFrame:
-    """(key, array<struct<payload>>) ordered by (``order_by``, payload)."""
-    payload_cols = [F.col(c) if isinstance(c, str) else c for c in payload]
-    order_col = F.col(order_by) if isinstance(order_by, str) else order_by
+    """(key, array<struct<payload>>) ordered by (``order_by``, payload).
+
+    ``payload`` and ``order_by`` are SQL expression texts: a column
+    name is one, and a computed field carries its name with ``AS``. The
+    aggregate is built as one expression text, so its cost on the
+    driver does not grow with the number of payload fields.
+    """
     # Sort by the order key embedded at position 0, then strip it.
-    wrapped = F.collect_list(F.struct(order_col.alias("_ord"), F.struct(*payload_cols).alias("_p")))
-    return df.groupBy(key).agg(F.transform(F.sort_array(wrapped), lambda s: s["_p"]).alias(out_col))
+    wrapped = f"collect_list(struct({order_by} AS _ord, struct({', '.join(payload)}) AS _p))"
+    return df.groupBy(key).agg(F.expr(f"transform(sort_array({wrapped}), s -> s._p) AS {ident(out_col)}"))
 
 
 def attach_nested(
     base: DataFrame,
     related: DataFrame,
     key: str,
-    payload: list[Column] | list[str],
-    order_by: str | Column,
+    payload: list[str],
+    order_by: str,
     out_col: str = "records",
 ) -> DataFrame:
     """Left-join nested sub-records onto a base table.

@@ -237,10 +237,8 @@ def q06_conditional_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q07_clean_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
-    dirty = F.concat(
-        F.col("p_name"), F.lit(" &amp; "), F.col("p_brand"), F.lit(" &lt;"), F.col("p_type"), F.lit("&gt;")
-    )
-    return part.select("p_partkey", clean_string(dirty).alias("clean_label"))
+    dirty = "concat(p_name, ' &amp; ', p_brand, ' &lt;', p_type, '&gt;')"
+    return part.selectExpr("p_partkey", f"{clean_string(dirty)} AS clean_label")
 
 
 # ---------------------------------------------------------------------------
@@ -285,10 +283,10 @@ def q08_display_title(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q09_split_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
-    code_list = F.concat(F.col("p_brand"), F.lit(", "), F.col("p_type"), F.lit("?, "), F.col("p_name"))
+    code_list = "concat(p_brand, ', ', p_type, '?, ', p_name)"
     return (
         part.filter(F.col("p_size") > 25)
-        .select("p_partkey", F.explode(split_flagged_codes(code_list)).alias("f"))
+        .selectExpr("p_partkey", f"explode({split_flagged_codes(code_list)}) AS f")
         .select(
             "p_partkey",
             F.col("f.Abbreviation").alias("abbreviation"),

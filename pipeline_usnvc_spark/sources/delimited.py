@@ -12,8 +12,33 @@ semantics; numeric pins are expressed in the supplied schema.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import types as T
+
+
+def delimited_reader(
+    spark: SparkSession,
+    sep: str = "\t",
+    encoding: str = "ISO-8859-1",
+    header: bool = True,
+    mode: str = "PERMISSIVE",
+    multiline: bool = False,
+) -> DataFrameReader:
+    """A CSV reader holding ``read_delimited``'s options, for many files.
+
+    Scanning many files with one reader (``reader.schema(s).csv(path)``
+    per file, each pinning its own schema) sets the options once
+    instead of once per file.
+    """
+    return spark.read.options(
+        sep=sep,
+        encoding=encoding,
+        header=str(header).lower(),
+        mode=mode,
+        multiLine=str(multiline).lower(),
+        quote='"',
+        escape='"',
+    )
 
 
 def read_delimited(
@@ -38,16 +63,4 @@ def read_delimited(
     so reserve it for tables whose values actually span lines and
     keep large bridge/fact files line-oriented and splittable.
     """
-    return (
-        spark.read.options(
-            sep=sep,
-            encoding=encoding,
-            header=str(header).lower(),
-            mode=mode,
-            multiLine=str(multiline).lower(),
-            quote='"',
-            escape='"',
-        )
-        .schema(schema)
-        .csv(path)
-    )
+    return delimited_reader(spark, sep, encoding, header, mode, multiline).schema(schema).csv(path)

@@ -10,9 +10,11 @@ Scale notes: every ``d_*`` dimension is tiny (3-1,506 rows) and
 decoded by ``operators/joins.decode_dimension``, which broadcasts it;
 the only shuffling joins are units⟕descriptions and the
 per-bridge nests keyed on element_global_id — at 100 TB those are the
-natural partition keys; build_documents materializes the units silver
-once (operators/checkpoint) so its multiline-CSV scan + join subtree
-is not replayed by each of its ~5 consumers.
+natural partition keys. build_documents materializes the units silver
+once (operators/checkpoint), with its dangling-parent check riding
+that checkpoint job, so the multiline-CSV scan + join subtree is not
+replayed by the closure, the nests and the root aggregate that read it.
+``read_export`` sets the CSV options once per reader, not per table.
 
 SESSION-SCOPE CONTRACT: ``read_export`` pins
 ``spark.sql.caseSensitive=true`` for the session and leaves it set —
@@ -30,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from pipeline_usnvc_spark.operators.joins import decode_dimension
-from pipeline_usnvc_spark.sources.delimited import read_delimited
+from pipeline_usnvc_spark.sources.delimited import delimited_reader
 from pipeline_usnvc_spark.usnvc.schemas import EXPORT_SCHEMAS
 
 
@@ -50,13 +52,9 @@ def read_export(spark: SparkSession, export_dir: str) -> dict[str, DataFrame]:
     # parses those by default); they get multiline parsing. The large
     # bridge files stay line-oriented and splittable.
     multiline_tables = {"unit", "unitDescription"}
+    readers = {multiline: delimited_reader(spark, multiline=multiline) for multiline in (False, True)}
     return {
-        name: read_delimited(
-            spark,
-            f"{export_dir}/{name}.txt",
-            schema,
-            multiline=name in multiline_tables,
-        )
+        name: readers[name in multiline_tables].schema(schema).csv(f"{export_dir}/{name}.txt")
         for name, schema in EXPORT_SCHEMAS.items()
     }
 

@@ -66,8 +66,6 @@ def render() -> str:
                 sig = str(inspect.signature(obj)) if inspect.isfunction(obj) else ""
             except (ValueError, TypeError):
                 sig = ""
-            if len(sig) > 80:
-                sig = sig[:77] + "..."
             entries.append(f"- `{name}{sig}` — {doc}")
         if entries:
             lines += [f"## {m.split('pipeline_usnvc_spark.')[-1]}", "", *entries, ""]

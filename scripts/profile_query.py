@@ -11,7 +11,6 @@ stage wall time.
 from __future__ import annotations
 
 import gc
-import json
 import os
 import sys
 import tempfile
@@ -22,6 +21,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 os.chdir(REPO)
 sys.path.insert(0, str(REPO))
+
+from perfbench.eventlog import read_events  # noqa: E402
 
 
 def main() -> None:
@@ -69,20 +70,8 @@ def main() -> None:
         sc.setJobDescription(None)
         gc.collect()
 
-    # flush the event log by stopping the session, then parse it
-    app_id = sc.applicationId
+    # flush the event log by stopping the session, then read it
     spark.stop()
-    ev = Path(evdir) / app_id
-    if not ev.exists():  # rolling / .inprogress variants
-        cands = list(Path(evdir).glob(f"*{app_id}*"))
-        ev = cands[0] if cands else None
-    if ev is not None and ev.is_dir():  # Spark 4 eventlog_v2 dir
-        files = sorted(p for p in ev.glob("events_*") if p.is_file())
-        lines = []
-        for p in files:
-            lines.extend(p.read_text().splitlines())
-    else:
-        lines = Path(ev).read_text().splitlines()
 
     # job id -> description; stage id -> job
     job_desc: dict[int, str] = {}
@@ -90,47 +79,43 @@ def main() -> None:
     stage_job: dict[int, int] = {}
     stage_info: dict[int, dict] = {}
     stage_tasks = defaultdict(lambda: dict(task_ms=0.0, sr=0, sw=0, rows_in=0))
-    if True:
-        for line in lines:
-            if not line.strip():
-                continue
-            e = json.loads(line)
-            et = e.get("Event")
-            if et == "SparkListenerJobStart":
-                jid = e["Job ID"]
-                job_desc[jid] = (e.get("Properties") or {}).get(
-                    "spark.job.description", ""
-                )
-                job_times[jid] = [e.get("Submission Time"), None]
-                for sid in e.get("Stage IDs", []):
-                    stage_job[sid] = jid
-            elif et == "SparkListenerJobEnd":
-                if e["Job ID"] in job_times:
-                    job_times[e["Job ID"]][1] = e.get("Completion Time")
-            elif et == "SparkListenerStageCompleted":
-                si = e["Stage Info"]
-                sid = si["Stage ID"]
-                sub = si.get("Submission Time")
-                comp = si.get("Completion Time")
-                stage_info[sid] = dict(
-                    name=si.get("Stage Name", ""),
-                    wall_ms=(comp - sub) if sub and comp else 0,
-                    n_tasks=si.get("Number of Tasks", 0),
-                )
-            elif et == "SparkListenerTaskEnd":
-                sid = e["Stage ID"]
-                tm = e.get("Task Metrics") or {}
-                st = stage_tasks[sid]
-                st["task_ms"] += tm.get("Executor Run Time", 0)
-                st["sr"] += (tm.get("Shuffle Read Metrics") or {}).get(
-                    "Remote Bytes Read", 0
-                ) + (tm.get("Shuffle Read Metrics") or {}).get("Local Bytes Read", 0)
-                st["sw"] += (tm.get("Shuffle Write Metrics") or {}).get(
-                    "Shuffle Bytes Written", 0
-                )
-                st["rows_in"] += (tm.get("Input Metrics") or {}).get(
-                    "Records Read", 0
-                )
+    for e in read_events(Path(evdir)):
+        et = e.get("Event")
+        if et == "SparkListenerJobStart":
+            jid = e["Job ID"]
+            job_desc[jid] = (e.get("Properties") or {}).get(
+                "spark.job.description", ""
+            )
+            job_times[jid] = [e.get("Submission Time"), None]
+            for sid in e.get("Stage IDs", []):
+                stage_job[sid] = jid
+        elif et == "SparkListenerJobEnd":
+            if e["Job ID"] in job_times:
+                job_times[e["Job ID"]][1] = e.get("Completion Time")
+        elif et == "SparkListenerStageCompleted":
+            si = e["Stage Info"]
+            sid = si["Stage ID"]
+            sub = si.get("Submission Time")
+            comp = si.get("Completion Time")
+            stage_info[sid] = dict(
+                name=si.get("Stage Name", ""),
+                wall_ms=(comp - sub) if sub and comp else 0,
+                n_tasks=si.get("Number of Tasks", 0),
+            )
+        elif et == "SparkListenerTaskEnd":
+            sid = e["Stage ID"]
+            tm = e.get("Task Metrics") or {}
+            st = stage_tasks[sid]
+            st["task_ms"] += tm.get("Executor Run Time", 0)
+            st["sr"] += (tm.get("Shuffle Read Metrics") or {}).get(
+                "Remote Bytes Read", 0
+            ) + (tm.get("Shuffle Read Metrics") or {}).get("Local Bytes Read", 0)
+            st["sw"] += (tm.get("Shuffle Write Metrics") or {}).get(
+                "Shuffle Bytes Written", 0
+            )
+            st["rows_in"] += (tm.get("Input Metrics") or {}).get(
+                "Records Read", 0
+            )
 
     for name in names:
         print(f"\n=== {name}: timed run {marks[name]:.2f}s ===")

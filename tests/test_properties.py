@@ -18,7 +18,14 @@ from collections import Counter
 from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from pipeline_usnvc_spark.functions.text import clean_string, split_flagged_codes, tokens, word_shingles
+from pipeline_usnvc_spark.functions.text import (
+    clean_string,
+    ident,
+    split_flagged_codes,
+    sql_string,
+    tokens,
+    word_shingles,
+)
 from pipeline_usnvc_spark.operators.checkpoint import materialize
 
 
@@ -44,7 +51,7 @@ TEXT = st.lists(
 @given(st.lists(TEXT, min_size=1, max_size=20))
 def test_clean_string_matches_reference_semantics(spark, cases):
     df = spark.createDataFrame([(c,) for c in cases], "s string")
-    out = df.select("s", clean_string(F.col("s")).alias("c")).collect()
+    out = df.selectExpr("s", f"{clean_string('s')} AS c").collect()
     for r in out:
         assert r["c"] == _py_clean(r["s"]), r["s"]
 
@@ -68,6 +75,23 @@ def test_tokens_and_shingles_match_python(spark, cases):
 
 
 @settings(max_examples=10, deadline=None)
+@given(st.lists(st.text(alphabet="ab'\\\n `ü", min_size=1, max_size=6), min_size=1, max_size=6, unique=True))
+def test_sql_text_quoting_round_trips(spark, values):
+    # each value read back as a literal and as a column name, under
+    # both settings of the string-literal escaping conf
+    named = spark.createDataFrame([tuple(values)], [f"c{i}" for i in range(len(values))]).toDF(*values)
+    conf = "spark.sql.parser.escapedStringLiterals"
+    for escaped in ("false", "true"):
+        spark.conf.set(conf, escaped)
+        try:
+            literals = spark.range(1).selectExpr(*(f"{sql_string(v)} AS c{i}" for i, v in enumerate(values)))
+            columns = named.selectExpr(*map(ident, values))
+            assert list(literals.first()) == values and list(columns.first()) == values
+        finally:
+            spark.conf.unset(conf)
+
+
+@settings(max_examples=10, deadline=None)
 @given(
     st.lists(
         st.tuples(st.sampled_from(["US", "CA", "MX", "XX"]), st.booleans(), st.booleans()),
@@ -79,7 +103,7 @@ def test_split_flagged_codes_property(spark, spec):
     # build "US, CA?, MX" style lists with optional leading spaces
     raw = ",".join((" " if lead else "") + code + ("?" if unc else "") for code, unc, lead in spec)
     df = spark.createDataFrame([(raw,)], "s string")
-    out = df.select(F.explode(split_flagged_codes(F.col("s"))).alias("f")).collect()
+    out = df.selectExpr(f"explode({split_flagged_codes('s')}) AS f").collect()
     assert len(out) == len(spec)
     for r, (code, unc, _lead) in zip(out, spec):
         assert r["f"]["Abbreviation"] == code
@@ -199,19 +223,19 @@ _RELATED = st.lists(
 @given(_RELATED, st.booleans())
 @example([], False)
 @example([(0, 1, "b"), (0, 1, "a"), (0, 0, None), (0, 1, None), (3, 2, "a")], True)
-def test_nest_records_orders_by_key_then_payload(spark, rows, column_key):
+def test_nest_records_orders_by_key_then_payload(spark, rows, expr_key):
     from pipeline_usnvc_spark.operators.nest import attach_nested
 
     related = spark.createDataFrame(rows, "k bigint, o bigint, p string").repartition(3)
     base = spark.createDataFrame([(k,) for k in range(8)], "k bigint")  # keys 6, 7: no rows
-    order_by = -F.col("o") if column_key else "o"
+    order_by = "-o" if expr_key else "o"
     got = {r["k"]: r["records"] for r in attach_nested(base, related, "k", ["p", "o"], order_by).collect()}
     assert set(got) == set(range(8))
     for k in range(8):
         # (order, payload) ascending; a null payload field sorts first
         want = sorted(
             (r for r in rows if r[0] == k),
-            key=lambda r: (-r[1] if column_key else r[1], r[2] is not None, r[2] or "", r[1]),
+            key=lambda r: (-r[1] if expr_key else r[1], r[2] is not None, r[2] or "", r[1]),
         )
         if not want:
             assert got[k] is None, k

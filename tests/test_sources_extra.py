@@ -179,7 +179,7 @@ def test_round10_source_guards(spark, tmp_path):
        line; both are now dropped while the metrics still count them.
     3. build_documents fails loudly on a dangling parent_id instead
        of shipping a document whose ancestors claim the root while
-       its parent points at a missing unit.
+       its parent points at a missing unit (test_dangling_parent_fails_loudly).
     """
     import json
 
@@ -212,24 +212,45 @@ def test_round10_source_guards(spark, tmp_path):
     assert len(lines) == 1 and lines[0]["row_id"] == "a"
 
 
-def test_dangling_parent_fails_loudly(spark):
-    # the gate's anti-join semantics on a minimal frame: the missing
-    # parent 999 must surface (docs.build_documents raises on it)
-    units = spark.createDataFrame(
-        [("1", None), ("2", "999")],
-        "element_global_id string, parent_id string",
-    )
-    from pyspark.sql import functions as F
+def _usnvc_export(tmp_path, name, tables):
+    """The fixture export with the rows of each table in ``tables``
+    replaced (an empty list leaves the header row alone)."""
+    from tests.usnvc_fixture import TABLES, write_fixture
 
-    dangling = (
-        units.filter(F.col("parent_id").isNotNull())
-        .select(F.col("parent_id").alias("_p"))
-        .distinct()
-        .join(
-            units.select(F.col("element_global_id").alias("_p")),
-            "_p",
-            "left_anti",
-        )
-        .collect()
+    export = write_fixture(tmp_path / name)
+    for table, rows in tables.items():
+        lines = ["\t".join(TABLES[table][0])] + ["\t".join(r) for r in rows]
+        (export / f"{table}.txt").write_text("\n".join(lines) + "\n", encoding="ISO-8859-1")
+    return str(export)
+
+
+def test_dangling_parent_fails_loudly(spark, tmp_path):
+    """A truncated export (unit 111's row is missing, so its child 112
+    names a parent with no unit row) fails in build_documents, before
+    anything is written, naming the missing id; an export with no units
+    writes exactly the synthetic root."""
+    import json
+
+    import pytest
+
+    from tests.usnvc_fixture import TABLES
+    from pipeline_usnvc_spark.usnvc.docs import build_documents
+    from pipeline_usnvc_spark.usnvc.ingest import build_silver, read_export
+    from pipeline_usnvc_spark.usnvc.ledger import write_documents
+
+    def docs(export):
+        return build_documents(build_silver(read_export(spark, export)), "2026-01-01T00:00:00")
+
+    truncated = [r for r in TABLES["unit"][1] if r[0] != "111"]
+    with pytest.raises(ValueError, match=r"no unit row \(truncated export\?\): 111$"):
+        docs(_usnvc_export(tmp_path, "truncated", {"unit": truncated}))
+
+    out = tmp_path / "empty_out"
+    metrics = write_documents(
+        docs(_usnvc_export(tmp_path, "empty", {"unit": [], "unitDescription": []})), str(out / "docs")
     )
-    assert [r["_p"] for r in dangling] == ["999"]
+    lines = [ln for part in sorted((out / "docs").glob("part-*")) for ln in part.read_text().splitlines()]
+    assert metrics["n_docs"] == 1 and len(lines) == 1
+    root = json.loads(lines[0])
+    assert root["row_id"] == "0" and root["source_data"]["children"] == []
+    assert '"children":[]' in lines[0]

@@ -49,6 +49,39 @@ def test_document_plan_collects_each_nest_once(spark, export_dir):
     assert len(re.findall(r"^\W*Aggregate \[", plan, re.M)) == 11
 
 
+def test_document_plan_builds_in_bounded_py4j_round_trips(spark, export_dir):
+    """Ingest, silver and document plan in at most 1,500 py4j round
+    trips: the count grows with the stages, not with the ~80 document
+    fields. Built field by field as Column objects, each paying
+    PySpark's call-site capture, the same plan took about 10,000.
+
+    Only the calls of the building thread count: py4j's own finalizer
+    thread sends garbage-collection messages for whatever Java objects
+    earlier code released, at times of its own."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    from pipeline_usnvc_spark.usnvc.docs import build_documents
+    from pipeline_usnvc_spark.usnvc.ingest import build_silver, read_export
+
+    calls = 0
+    send = ClientServerConnection.send_command
+    builder = threading.get_ident()
+
+    def counted(self, command, *args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == builder
+        return send(self, command, *args, **kwargs)
+
+    ClientServerConnection.send_command = counted
+    try:
+        build_documents(build_silver(read_export(spark, export_dir)), "2026-01-01T00:00:00")
+    finally:
+        ClientServerConnection.send_command = send
+    assert 0 < calls <= 1500, calls
+
+
 UNIT_IDS = ["100", "110", "111", "112", "113", "114", "200", "210"]
 
 
