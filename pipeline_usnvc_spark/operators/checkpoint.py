@@ -54,11 +54,43 @@ def fan_out(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
     convention as ``materialize``).
     """
     if df.isStreaming:
-        # .rdd is illegal on an unbounded frame, and micro-batches
-        # already parallelize per trigger — identity, like at scale.
+        # An unbounded frame has no batch plan to read, and
+        # micro-batches already parallelize per trigger — identity,
+        # like at scale.
         return df
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < max(1, int(target * min_fraction)):
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if _planned_partitions(df) < max(1, int(target * min_fraction)):
         return df.repartition(target)
     return df
+
+
+def _planned_partitions(df: DataFrame) -> int:
+    """The number of partitions ``df`` will run in, read off its
+    physical plan before anything executes. (``df.rdd`` gives it too,
+    but under AQE it first runs the frame's query stages, such as a
+    broadcast, only to be counted.)
+
+    A node that declares its output partitioning (a shuffle, a
+    coalesce, a limit) counts that; a broadcast build side counts
+    nothing; a leaf scan counts its splits; any other node sums its
+    children. A shuffle counts the partitions it is planned with,
+    before AQE coalesces them at run time."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # AQE's initial plan: nothing has run
+    return _partitions(plan)
+
+
+def _partitions(node) -> int:
+    part = node.outputPartitioning()
+    if part.getClass().getSimpleName() == "BroadcastPartitioning":
+        return 0
+    declared = part.numPartitions()
+    if declared:
+        return declared
+    children = node.children()
+    if children.isEmpty():
+        # Building a scan's RDD lists its splits and runs no job.
+        rdd = node.executeColumnar() if node.supportsColumnar() else node.execute()
+        return rdd.getNumPartitions()
+    return sum(_partitions(children.apply(i)) for i in range(children.size()))

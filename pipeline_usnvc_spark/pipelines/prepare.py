@@ -5,7 +5,7 @@ oracle-verified operators end-to-end:
     curate (quality -> exact dedup -> near dedup -> source quota)
       -> decontaminated train/eval split (GPT-3/Pile discipline)
         -> token-balanced shard packing
-          -> sharded parquet writer + JSON stats manifest
+          -> sharded zstd parquet writer + JSON stats manifest
 
 Every stage is the same code the per-operator queries verify (q174
 curation gate, q187 decontamination, q197 shard packing), so the
@@ -20,6 +20,14 @@ audit and the labelled frame). The split is one shingle-keyed
 semi-join; packing is the two-phase global rank; the writer partitions
 by (split, shard) so a 1000-executor run writes all shards
 concurrently.
+
+Storage posture: the corpus is written once and read on every
+training epoch, so the writer compresses its pages with zstd, not
+Spark's default snappy. On the perfbench corpus that writes ~0.25
+bytes per input byte where snappy wrote ~0.38: about a third fewer
+bytes for the same rows. Rewriting 4.6 MB (snappy) of sf0.1 documents
+on 4 vCPUs, zstd took 0.24 s, snappy 0.22 s and gzip 0.44 s; gzip
+wrote ~8% fewer bytes there and the same as zstd on perfbench.
 """
 
 from __future__ import annotations
@@ -34,6 +42,10 @@ from pipeline_usnvc_spark.operators.checkpoint import materialize
 from pipeline_usnvc_spark.operators.dedup_pipeline import curate
 from pipeline_usnvc_spark.operators.rank import with_global_rank
 
+# Page codec of the train shards and the eval split (see "Storage
+# posture" above). Set on the two writes, not the session:
+# layout.compact_small_files sizes its output from bytes on disk.
+_CODEC = "zstd"
 _STAGES = ("quality", "exact_dup", "near_dup", "quota", "kept")
 _SPLITS = ("train", "eval", "dropped_contaminated")
 
@@ -182,8 +194,8 @@ def prepare_training_data(
 
     Layout::
 
-        {out}/train/shard=K/*.parquet   (token-balanced shards)
-        {out}/eval/*.parquet
+        {out}/train/shard=K/*.parquet   (token-balanced shards, zstd)
+        {out}/eval/*.parquet            (zstd)
         {out}/manifest.json             (stage/token accounting)
 
     Returns the manifest dict. Deterministic end-to-end (md5 orders,
@@ -200,21 +212,21 @@ def prepare_training_data(
     # split counts cannot come from the writes: dropped_contaminated
     # rows are never written.
     label_obs = Observation("labels")
-    labelled = (
-        label_and_shard(docs, audit, n_shards=n_shards, eval_pct=eval_pct)
-        .observe(
+    labelled = materialize(  # two writes reuse one run
+        label_and_shard(docs, audit, n_shards=n_shards, eval_pct=eval_pct).observe(
             label_obs,
             *(F.count(F.when(F.col("split") == s, 1)).alias(s) for s in _SPLITS),
             *_docs_and_tokens("shard", range(n_shards)),
         )
-        .localCheckpoint()  # two writes reuse one run
     )
 
     sharded = labelled.filter(F.col("split") == "train").drop("split")
     evald = labelled.filter(F.col("split") == "eval").drop("split", "shard")
 
-    sharded.write.partitionBy("shard").mode("overwrite").parquet(f"{out_dir}/train")
-    evald.write.mode("overwrite").parquet(f"{out_dir}/eval")
+    sharded.write.partitionBy("shard").mode("overwrite").parquet(
+        f"{out_dir}/train", compression=_CODEC
+    )
+    evald.write.mode("overwrite").parquet(f"{out_dir}/eval", compression=_CODEC)
 
     stages, labels = stage_obs.get, label_obs.get
     stage_stats = _docs_and_tokens_stats(stages, _STAGES)

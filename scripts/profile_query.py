@@ -3,7 +3,10 @@
 is disabled in this sandbox): runs each query once warm + once
 profiled through the noop sink, then prints per-stage wall time,
 task-time sum, shuffle read/write bytes and row counts, sorted by
-stage wall time.
+stage wall time. For each run it also prints the CPU seconds the JVM's
+JIT compiler threads (C1/C2 ``CompilerThread``) spent next to those of
+all its other threads, read from ``/proc/<jvm pid>/task/*/stat``: a
+cold run that is bound on JIT compilation shows it there.
 
     python scripts/profile_query.py q206_prepare_corpus [-n extra_reps]
 """
@@ -23,6 +26,37 @@ os.chdir(REPO)
 sys.path.insert(0, str(REPO))
 
 from perfbench.eventlog import read_events  # noqa: E402
+
+_TICK = os.sysconf("SC_CLK_TCK")
+
+
+def _jvm_cpu(pid: int) -> tuple[float, dict[str, float]]:
+    """The JVM's CPU seconds so far: the whole process (exited threads
+    included) and each live JIT compiler thread by tid."""
+
+    def cpu(stat: str) -> tuple[str, float]:
+        name = stat[stat.index("(") + 1 : stat.rindex(")")]
+        fields = stat[stat.rindex(")") + 2 :].split()
+        return name, (int(fields[11]) + int(fields[12])) / _TICK  # utime, stime
+
+    _, total = cpu(Path(f"/proc/{pid}/stat").read_text())
+    compilers = {}
+    for task in Path(f"/proc/{pid}/task").iterdir():
+        try:
+            name, s = cpu((task / "stat").read_text())
+        except (OSError, ValueError):  # the thread ended while listed
+            continue
+        if "CompilerThre" in name:  # comm is cut at 15 chars
+            compilers[task.name] = s
+    return total, compilers
+
+
+def _jit_split(before, after) -> tuple[float, float]:
+    """(compiler-thread, other-thread) JVM CPU seconds between two
+    ``_jvm_cpu`` readings. A compiler thread that exits in between
+    counts under the other threads."""
+    jit = sum(s - before[1].get(tid, 0.0) for tid, s in after[1].items())
+    return jit, after[0] - before[0] - jit
 
 
 def main() -> None:
@@ -57,16 +91,21 @@ def main() -> None:
             return lambda: customer_documents(spark, sf_dir)
         return lambda: QUERIES[name](spark, sf_dir)
 
-    marks = {}
+    jvm_pid = int(spark._jvm.ProcessHandle.current().pid())
+    marks, jit = {}, {}
     for name in names:
         build = _builder(name)
+        cpu0 = _jvm_cpu(jvm_pid)
         sc.setJobDescription(f"warm:{name}")
         build().write.format("noop").mode("overwrite").save()
         gc.collect()
+        cpu1 = _jvm_cpu(jvm_pid)
         sc.setJobDescription(f"timed:{name}")
         t0 = time.perf_counter()
         build().write.format("noop").mode("overwrite").save()
         marks[name] = time.perf_counter() - t0
+        cpu2 = _jvm_cpu(jvm_pid)
+        jit[name] = (_jit_split(cpu0, cpu1), _jit_split(cpu1, cpu2))
         sc.setJobDescription(None)
         gc.collect()
 
@@ -119,6 +158,11 @@ def main() -> None:
 
     for name in names:
         print(f"\n=== {name}: timed run {marks[name]:.2f}s ===")
+        for run, (compiler_s, other_s) in zip(("warm", "timed"), jit[name]):
+            print(
+                f"  JVM CPU, {run} run: JIT compiler threads {compiler_s:.2f}s, "
+                f"other threads {other_s:.2f}s"
+            )
         rows = []
         for sid, si in stage_info.items():
             jid = stage_job.get(sid)

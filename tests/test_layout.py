@@ -282,6 +282,26 @@ def test_scripts_hold_no_round_named_harness():
     assert not named, f"round-named scripts in scripts/: {named}"
 
 
+def test_product_paths_checkpoint_only_through_materialize():
+    """pipelines/ and usnvc/ cut lineage only through
+    operators.checkpoint.materialize, which takes the reliable
+    checkpoint when a checkpoint dir is set: a raw localCheckpoint
+    there would be the one cut that does not survive executor loss."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "pipeline_usnvc_spark"
+    raw = re.compile(r"\.(localCheckpoint|checkpoint)\(")
+    found = [
+        f"{path.relative_to(pkg)}:{n}"
+        for sub in ("pipelines", "usnvc")
+        for path in sorted((pkg / sub).rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if raw.search(line)
+    ]
+    assert not found, f"raw checkpoint calls outside materialize: {found}"
+
+
 def test_api_md_matches_generator():
     """API.md is generated (scripts/gen_api_md.py): a public signature
     or docstring summary that changes without regenerating it fails

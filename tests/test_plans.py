@@ -1514,3 +1514,42 @@ def test_update_mode_ledger_no_fp_exchange(spark, sf_dir):
     assert final.count("Bucketed: true") >= 2, final[:2000]
     assert "CartesianProduct" not in final
     assert "EvalPython" not in final and "MapInPandas" not in final
+
+
+@pytest.mark.parametrize("source", ["one_file", "many_files"])
+@pytest.mark.parametrize("shape", ["scan", "scan_semi_broadcast"])
+def test_fan_out_decides_without_a_job(spark, sf_dir, tmp_path, source, shape):
+    """fan_out reads the source partition count off the physical plan:
+    over a scan ⋉ broadcast(small) it starts no job (``df.rdd`` ran the
+    broadcast only to count), and it returns the same frame or the same
+    repartition as the count that ``df.rdd`` gives."""
+    from pyspark.sql import functions as F
+
+    from pipeline_usnvc_spark.operators.checkpoint import fan_out
+    from pipeline_usnvc_spark.sources.tables import load_table
+
+    sc = spark.sparkContext
+    target = sc.defaultParallelism
+    docs = load_table(spark, sf_dir, "documents")
+    if source == "many_files":
+        docs.repartition(2 * target).write.parquet(str(tmp_path / "docs"))
+        docs = spark.read.parquet(str(tmp_path / "docs"))
+    if shape == "scan_semi_broadcast":
+        small = spark.range(0, 400, 3).withColumnRenamed("id", "doc_id")
+        docs = docs.join(F.broadcast(small), "doc_id", "left_semi")
+
+    group = f"fan_out_{source}_{shape}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fan_out(docs)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc._jsc.clearJobGroup()
+
+    if docs.rdd.getNumPartitions() < max(1, int(target * 0.5)):
+        expected = docs.repartition(target)._jdf.queryExecution().analyzed()
+        assert out._jdf.queryExecution().analyzed().sameResult(expected)
+    else:
+        assert out is docs
+    if source == "many_files":
+        assert out is docs

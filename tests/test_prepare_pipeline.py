@@ -6,18 +6,30 @@ from __future__ import annotations
 
 import json
 
+import duckdb
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from pipeline_usnvc_spark.sources.tables import load_table
 
 
-def test_prepare_training_data_end_to_end(spark, sf_dir, tmp_path):
+@pytest.fixture(scope="module")
+def prepared(spark, sf_dir, tmp_path_factory):
+    """One pipeline run over the fixture documents: (out dir, manifest)."""
+    from pipeline_usnvc_spark.pipelines import prepare_training_data
+
+    out = tmp_path_factory.mktemp("prepared") / "corpus"
+    docs = load_table(spark, sf_dir, "documents")
+    return out, prepare_training_data(docs, str(out), n_shards=4)
+
+
+def test_prepare_training_data_end_to_end(spark, sf_dir, tmp_path, prepared):
     from pipeline_usnvc_spark.pipelines import prepare_training_data
 
     docs = load_table(spark, sf_dir, "documents")
-    out = str(tmp_path / "corpus")
-    manifest = prepare_training_data(docs, out, n_shards=4)
+    out_dir, manifest = prepared
+    out = str(out_dir)
 
     # 1. accounting closes: every input doc lands in exactly one stage
     assert manifest["input_docs"] == docs.count()
@@ -47,13 +59,62 @@ def test_prepare_training_data_end_to_end(spark, sf_dir, tmp_path):
         assert max(loads) - min(loads) <= max_doc
 
     # 5. manifest file round-trips
-    on_disk = json.loads((tmp_path / "corpus" / "manifest.json").read_text())
+    on_disk = json.loads((out_dir / "manifest.json").read_text())
     assert on_disk["split"] == {k: v for k, v in manifest["split"].items()}
 
     # 6. deterministic: a second run writes the identical manifest
     out2 = str(tmp_path / "corpus2")
     manifest2 = prepare_training_data(docs, out2, n_shards=4)
     assert manifest2 == manifest
+
+
+_ROW = ("doc_id", "text", "source", "n_tokens", "shard")
+
+
+def test_prepared_corpus_is_zstd_and_engines_agree(spark, prepared):
+    """The train shards and the eval split are zstd parquet in every
+    column chunk, and Spark, pyarrow and DuckDB (the oracle engine)
+    read back the same rows. The manifest beside them is the one the
+    run returned, which the determinism check above reproduces."""
+    out, manifest = prepared
+    files = sorted(out.glob("train/shard=*/*.parquet")) + sorted(out.glob("eval/*.parquet"))
+    codecs = set()
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        for g in range(meta.num_row_groups):
+            rg = meta.row_group(g)
+            codecs |= {rg.column(c).compression for c in range(rg.num_columns)}
+    assert codecs == {"ZSTD"}
+
+    def by_spark(split):
+        df = spark.read.parquet(str(out / split))
+        if split == "eval":
+            df = df.withColumn("shard", F.lit(None).cast("int"))
+        return sorted(tuple(r) for r in df.select(*_ROW).collect())
+
+    def by_pyarrow(split):
+        rows = pq.read_table(out / split, partitioning="hive").to_pylist()
+        return sorted(tuple(r.get(c) for c in _ROW) for r in rows)
+
+    def by_duckdb(split):
+        shard = "CAST(shard AS INTEGER)" if split == "train" else "NULL::INTEGER"
+        glob = "*/*.parquet" if split == "train" else "*.parquet"
+        return sorted(
+            duckdb.sql(
+                f"SELECT doc_id, text, source, n_tokens, {shard} AS shard "
+                f"FROM read_parquet('{out / split}/{glob}', hive_partitioning = true)"
+            ).fetchall()
+        )
+
+    for split in ("train", "eval"):
+        rows = by_spark(split)
+        assert len(rows) == manifest["split"].get(split, 0)
+        assert by_pyarrow(split) == rows, split
+        assert by_duckdb(split) == rows, split
+
+    assert json.loads((out / "manifest.json").read_text()) == json.loads(
+        json.dumps(manifest)
+    )
 
 
 def test_prepare_degenerate_inputs(spark, tmp_path):
