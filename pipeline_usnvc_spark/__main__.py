@@ -36,7 +36,7 @@ def main(argv: list[str] | None = None) -> int:
     from pipeline_usnvc_spark.session import get_spark
     from pipeline_usnvc_spark.usnvc.docs import build_documents
     from pipeline_usnvc_spark.usnvc.ingest import build_silver, read_export
-    from pipeline_usnvc_spark.usnvc.ledger import ChangeLedger, write_documents
+    from pipeline_usnvc_spark.usnvc.ledger import write_documents
 
     spark = get_spark(app_name="usnvc_pipeline", master=args.master)
     spark.sparkContext.setLogLevel("ERROR")
@@ -46,9 +46,7 @@ def main(argv: list[str] | None = None) -> int:
     docs = build_documents(silver, run_timestamp=args.run_timestamp)
     if args.limit is not None:
         docs = docs.limit(args.limit)
-    ledger = ChangeLedger(spark)
-    write_documents(docs, args.out, quarantine_dir=args.quarantine, ledger=ledger)
-    n = ledger.counter("documents_written").value
+    n = write_documents(docs, args.out, quarantine_dir=args.quarantine)["documents_written"]
     print(f"{n} documents -> {args.out} in {time.perf_counter() - t0:.1f}s", file=sys.stderr)
     return 0
 

@@ -208,55 +208,3 @@ def with_global_cumsum(
         .withColumn(cumsum_col, (F.col("_lcs") + F.col("_off")).cast(sum_type))
         .drop("_pid", "_lcs", "_off")
     )
-
-
-def grouped_topk(
-    df: DataFrame,
-    group_cols: list[str] | str,
-    order_cols: list[Column | str],
-    k: int,
-    rank_col: str = "rank",
-    n_salt: int = 16,
-) -> DataFrame:
-    """Exact top-k rows per group under a total order, without ever
-    materializing a whole group in one window partition.
-
-    NOTE: for the plain ``row_number().over(...) <= k`` pattern Spark
-    already rewrites the window into ``WindowGroupLimit`` with a
-    PARTIAL stage before the exchange (map-side top-k pruning —
-    asserted in test_scale_ops), so prefer the single window there.
-    Reach for this operator when the rewrite can't apply: the k is
-    per-group (joined in after ranking), the rank feeds further
-    window functions, or the engine/version lacks the rewrite.
-
-    A plain ``Window.partitionBy(group)`` without that rewrite ranks
-    a billion-row hot group in ONE task (the classic skew OOM). This
-    is the standard two-stage refinement instead:
-
-    1. rank within (group, salt) — salt derived from the ordering
-       key's hash, so every salted partition is bounded at ~|group|/S
-       — and keep each bucket's local top-k;
-    2. final rank over the ≤ k·S survivors per group — a bounded
-       window no matter how hot the group is.
-
-    Stage-1 pruning is sound because a row outside its bucket's local
-    top-k is beaten by k rows of the same group and can never make
-    the global top-k. ``order_cols`` must be a total order (include a
-    tie-breaker) for the output ranks to be deterministic.
-    """
-    if isinstance(group_cols, str):
-        group_cols = [group_cols]
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    # pmod, not abs+%: abs(Integer.MIN_VALUE) overflows negative and
-    # % keeps the sign, which would leak a stray negative salt bucket.
-    salt = F.pmod(F.hash(*cols), F.lit(n_salt))
-    w_local = Window.partitionBy(*group_cols, "_salt").orderBy(*cols)
-    w_final = Window.partitionBy(*group_cols).orderBy(*cols)
-    return (
-        df.withColumn("_salt", salt)
-        .withColumn("_lrk", F.row_number().over(w_local))
-        .filter(F.col("_lrk") <= k)
-        .withColumn(rank_col, F.row_number().over(w_final))
-        .filter(F.col(rank_col) <= k)
-        .drop("_salt", "_lrk")
-    )

@@ -15,8 +15,8 @@ computes. The kernel has two modes:
 Approximate paths (LSH, multi-probe LSH, IVF, PQ) generate candidates
 by equi-joins on bucket or cell ids and score them with the same
 sequential fold. The hyperplanes are derived deterministically from
-md5 of (plane, dim) — no RNG state, reproducible across engines and
-runs.
+md5 of (table, plane, dim) — no RNG state, reproducible across engines
+and runs.
 """
 
 from __future__ import annotations
@@ -230,48 +230,6 @@ def brute_force_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "sim")
     )
-
-
-def _hyperplane(n_planes: int, dim: int) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes: component (p, d) is
-    derived from md5(f"{p}:{d}") mapped into [-1, 1). Pure function of
-    (p, d) — identical on every engine/run with no RNG."""
-    import hashlib
-
-    planes = []
-    for p in range(n_planes):
-        row = []
-        for d in range(dim):
-            h = int(hashlib.md5(f"{p}:{d}".encode()).hexdigest()[:8], 16)
-            row.append((h / float(0xFFFFFFFF)) * 2.0 - 1.0)
-        planes.append(row)
-    return planes
-
-
-def lsh_bucket_ids(
-    vectors: DataFrame,
-    n_planes: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, bucket) — sign-bit bucket from random hyperplanes.
-
-    The planes ship as literal arrays inside the plan (a few KB) —
-    effectively a broadcast of the quantizer, no driver loop.
-    """
-    planes = _hyperplane(n_planes, dim)
-    v = vectors.select(F.col(id_col), to_double_array(vec_col).alias("v"))
-    bucket = F.lit(0).cast("bigint")
-    for p, plane in enumerate(planes):
-        plane_col = F.array(*[F.lit(x) for x in plane])
-        d = F.aggregate(
-            F.zip_with(F.col("v"), plane_col, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(d > 0, F.lit(2**p).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
-    return v.select(id_col, bucket.alias("bucket"))
 
 
 def kmeans_centroids(

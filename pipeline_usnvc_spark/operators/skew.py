@@ -1,14 +1,14 @@
-"""Skew- and layout-management utilities for 100 TB operation.
+"""Skew-management utilities for 100 TB operation.
 
 AQE (enabled in session.py) already splits skewed shuffle-join
 partitions at runtime; these helpers cover the cases AQE can't:
-aggregations over a hot key (salted two-phase agg) and repeated
-co-located joins (bucketed table layout).
+aggregations over a hot key (salted two-phase agg) and a skewed
+equi-join whose small side is too large to broadcast whole.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -49,19 +49,3 @@ def salted_join(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)).cast("array<bigint>"))
     )
     return big_s.join(small_s, [key, "_salt"]).drop("_salt")
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    key: str,
-    num_buckets: int = 32,
-    sort_by: str | None = None,
-) -> None:
-    """Persist with a bucketed layout so later joins/aggs on ``key``
-    co-locate without a shuffle (Spark reads bucket metadata from the
-    catalog and plans a shuffle-free SortMergeJoin)."""
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, key)
-    if sort_by:
-        writer = writer.sortBy(sort_by)
-    writer.saveAsTable(table_name)

@@ -43,8 +43,8 @@ from pipeline_usnvc_spark.operators.dedup_pipeline import curate
 from pipeline_usnvc_spark.operators.rank import with_global_rank
 
 # Page codec of the train shards and the eval split (see "Storage
-# posture" above). Set on the two writes, not the session:
-# layout.compact_small_files sizes its output from bytes on disk.
+# posture" above). Set on the two writes, not the session: the
+# layout and zone-map queries write their own parquet.
 _CODEC = "zstd"
 _STAGES = ("quality", "exact_dup", "near_dup", "quota", "kept")
 _SPLITS = ("train", "eval", "dropped_contaminated")

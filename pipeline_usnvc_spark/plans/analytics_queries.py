@@ -15,14 +15,8 @@ from pyspark.sql import functions as F
 
 from pipeline_usnvc_spark.functions.text import tokens
 from pipeline_usnvc_spark.plans.dedup_queries import _SHINGLES_SQL
-from pipeline_usnvc_spark.plans.registry import query
+from pipeline_usnvc_spark.plans.registry import _d38, query
 from pipeline_usnvc_spark.sources.tables import load_table
-
-
-def _d38(c):
-    """Exact-integer product/sum domain (overflow-safe sufficient
-    statistics — the suite-wide DECIMAL(38,0) discipline)."""
-    return c.cast("decimal(38,0)")
 
 
 # ---------------------------------------------------------------------------

@@ -25,14 +25,9 @@ from pipeline_usnvc_spark.functions.text import (
     word_shingles,
 )
 from pipeline_usnvc_spark.plans.dedup_queries import _MINHASH_SQL
-from pipeline_usnvc_spark.plans.registry import query
+from pipeline_usnvc_spark.plans.registry import _d38, query
 from pipeline_usnvc_spark.sources.tables import load_table
 
-
-def _d38(c):
-    """Exact-integer product/sum domain (overflow-safe sufficient
-    statistics — the suite-wide DECIMAL(38,0) discipline)."""
-    return c.cast("decimal(38,0)")
 
 from pipeline_usnvc_spark.functions.text import TOKENIZE_SQL as _TOKS_SQL
 
@@ -375,9 +370,7 @@ def q165_source_quota_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Hot-source safety comes free: Spark rewrites row_number()<=k
     # into WindowGroupLimit(Partial) BEFORE the exchange, so each map
     # task pre-prunes to its local top-k per source and at most
-    # k·tasks rows per source ever shuffle (asserted in test_plans;
-    # operators/rank.grouped_topk is the manual fallback for
-    # rank patterns the rewrite can't match).
+    # k·tasks rows per source ever shuffle (asserted in test_plans).
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
     )

@@ -9,18 +9,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from pipeline_usnvc_spark.plans.registry import query
+from pipeline_usnvc_spark.plans.registry import _d38, _dec, query
 from pipeline_usnvc_spark.sources.tables import load_table
-
-
-def _d38(c):
-    """Exact-integer product/sum domain (overflow-safe sufficient
-    statistics — the suite-wide DECIMAL(38,0) discipline)."""
-    return c.cast("decimal(38,0)")
-
-
-def _dec(c, scale: int = 2):
-    return (F.col(c) if isinstance(c, str) else c).cast(f"decimal(18,{scale})")
 
 
 # ---------------------------------------------------------------------------

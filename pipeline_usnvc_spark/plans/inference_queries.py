@@ -36,16 +36,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pipeline_usnvc_spark.plans.registry import query
+from pipeline_usnvc_spark.plans.registry import _d38, query
 from pipeline_usnvc_spark.sources.tables import load_table
 
 from pipeline_usnvc_spark.functions.text import DOC_SCORE_SQL as _DOC_SCORE_SQL
 from pipeline_usnvc_spark.functions.text import TOKENIZE_SQL as _TOKS_SQL
 from pipeline_usnvc_spark.functions.text import doc_score_micro
-
-
-def _d38(c):
-    return c.cast("decimal(38,0)")
 
 
 # ---------------------------------------------------------------------------
@@ -3004,9 +3000,8 @@ def q369_hellinger_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Hive-bucketed tables (8 buckets on the join key, sorted in-bucket),
 # then join WITHOUT a shuffle — the bucketing story the 100 TB design
 # leans on: a fact table bucketed at write time pays its exchange
-# once, and every subsequent key join rides the stored layout (the
-# persisted-layout sibling of operators/layout.py's range-sorted
-# sink). The join itself is exchange-free (plan-audited in
+# once, and every subsequent key join rides the stored layout. The
+# join itself is exchange-free (plan-audited in
 # tests/test_plans.py); the only shuffle left is the final
 # nation-grain aggregate. Results are layout-independent, so the
 # DuckDB oracle is the plain join — correctness certifies the

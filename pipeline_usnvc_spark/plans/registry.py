@@ -14,7 +14,8 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -33,3 +34,14 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
         return fn
 
     return deco
+
+
+def _d38(c: Column) -> Column:
+    """Exact-integer product/sum domain (overflow-safe sufficient
+    statistics — the suite-wide DECIMAL(38,0) discipline)."""
+    return c.cast("decimal(38,0)")
+
+
+def _dec(c: Column | str, scale: int = 2) -> Column:
+    """Money-exact DECIMAL(18, scale) of a column or column name."""
+    return (F.col(c) if isinstance(c, str) else c).cast(f"decimal(18,{scale})")

@@ -15,12 +15,8 @@ from pyspark.sql import functions as F
 from pipeline_usnvc_spark.functions.text import clean_string, split_flagged_codes
 from pipeline_usnvc_spark.operators.joins import decode_dimension, star_join
 from pipeline_usnvc_spark.operators.nest import attach_nested
-from pipeline_usnvc_spark.plans.registry import query
+from pipeline_usnvc_spark.plans.registry import _dec, query
 from pipeline_usnvc_spark.sources.tables import load_table
-
-
-def _dec(c, scale: int = 2):
-    return (F.col(c) if isinstance(c, str) else c).cast(f"decimal(18,{scale})")
 
 
 # ---------------------------------------------------------------------------

@@ -81,19 +81,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pipeline_usnvc_spark.plans.registry import query
+from pipeline_usnvc_spark.plans.registry import _d38, query
 from pipeline_usnvc_spark.sources.tables import load_table
 
 _Q = 10_000_000  # component quantization (floor(x * 1e7)), suite-wide
 _LAMBDA_Q2 = 10**14  # ridge lambda = 1.0 expressed in q^2 gram units
 _R_REDUCE = 10**14  # common-factor reduction of (num, det) before the solve div
 _VACUUM_DEAD_MICRO = 100_000  # vacuum a partition at >= 10% dead rows
-
-
-def _d38(c: Column) -> Column:
-    """Exact-integer product/sum domain (overflow-safe sufficient
-    statistics — the suite-wide DECIMAL(38,0) discipline)."""
-    return c.cast("decimal(38,0)")
 
 
 def _dlit(x: int) -> Column:

@@ -76,17 +76,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from pipeline_usnvc_spark.plans.registry import query
+from pipeline_usnvc_spark.plans.registry import _d38, query
 from pipeline_usnvc_spark.sources.tables import load_table
 
 # Exact-rational order key scale: total order for bin counts <= 1e12
 # (see module docstring).
 _ORD_SCALE = 10**24
-
-
-def _d38(c: Column) -> Column:
-    """DECIMAL(38,0) — the suite-wide exact-integer domain."""
-    return c.cast("decimal(38,0)")
 
 
 def _pfdiv(num: Column, den: Column) -> Column:

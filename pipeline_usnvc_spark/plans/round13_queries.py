@@ -69,9 +69,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pipeline_usnvc_spark.plans.registry import query
+from pipeline_usnvc_spark.plans.registry import _d38, query
 from pipeline_usnvc_spark.plans.round11_queries import (
-    _d38,
     _ORACLE_PAIRS,
     _Q,
     _sfdiv,

@@ -46,7 +46,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pipeline_usnvc_spark.plans.registry import query
+from pipeline_usnvc_spark.plans.registry import _d38, query
 from pipeline_usnvc_spark.sources.tables import load_table
 
 from pipeline_usnvc_spark.functions.text import TOKENIZE_SQL as _TOKS_SQL
@@ -57,10 +57,6 @@ from pipeline_usnvc_spark.functions.text import TOKENIZE_SQL as _TOKS_SQL
 from pipeline_usnvc_spark.functions.text import DOC_SCORE_SQL as _SCORE_SQL
 from pipeline_usnvc_spark.functions.text import doc_score_micro as _score_micro
 from pipeline_usnvc_spark.functions.text import tokens
-
-
-def _d38(c):
-    return c.cast("decimal(38,0)")
 
 
 def _fdiv_micro(num, den):

@@ -33,12 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pipeline_usnvc_spark.plans.registry import query
+from pipeline_usnvc_spark.plans.registry import _d38, query
 from pipeline_usnvc_spark.sources.tables import load_table
-
-
-def _d38(c):
-    return c.cast("decimal(38,0)")
 
 
 def _idiv(x, y):

@@ -18,7 +18,7 @@ from pipeline_usnvc_spark.functions.text import (
     token_count,
     tokens,
 )
-from pipeline_usnvc_spark.plans.registry import query
+from pipeline_usnvc_spark.plans.registry import _d38, query
 from pipeline_usnvc_spark.sources.tables import load_table
 
 # Shared DuckDB fragment: identical tokenization to functions.text.tokens
@@ -1763,9 +1763,6 @@ def q266_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q268_length_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def _d38_txt(c):
-        return c.cast("decimal(38,0)")
-
     docs = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
     l_micro = (
         F.round(F.round(F.log(F.col("n_chars").cast("double")), 6) * 1000000.0)
@@ -1773,12 +1770,12 @@ def q268_length_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stats = docs.select("source", l_micro.alias("l_micro")).groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_docs"),
-        F.sum(_d38_txt(F.col("l_micro"))).cast("decimal(38,0)").alias("s"),
-        F.sum(_d38_txt(F.col("l_micro")) * _d38_txt(F.col("l_micro")))
+        F.sum(_d38(F.col("l_micro"))).cast("decimal(38,0)").alias("s"),
+        F.sum(_d38(F.col("l_micro")) * _d38(F.col("l_micro")))
         .cast("decimal(38,0)")
         .alias("ss"),
     )
-    n = _d38_txt(F.col("n_docs"))
+    n = _d38(F.col("n_docs"))
     return stats.select(
         "source",
         "n_docs",

@@ -40,18 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pipeline_usnvc_spark.plans.registry import query
+from pipeline_usnvc_spark.plans.registry import _d38, _dec, query
 from pipeline_usnvc_spark.sources.tables import load_table
-
-
-def _dec(c, scale: int = 2):
-    return (F.col(c) if isinstance(c, str) else c).cast(f"decimal(18,{scale})")
-
-
-def _d38(c):
-    """Exact-integer product/sum domain (the suite's overflow-safe
-    sufficient-statistics type)."""
-    return c.cast("decimal(38,0)")
 
 
 _REV = "CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))"

@@ -1,4 +1,3 @@
-from pipeline_usnvc_spark.sources.tables import TABLE_NAMES, load_table, load_tables, register_views
-from pipeline_usnvc_spark.sources.delimited import read_delimited
+from pipeline_usnvc_spark.sources.tables import load_table
 
-__all__ = ["TABLE_NAMES", "load_table", "load_tables", "register_views", "read_delimited"]
+__all__ = ["load_table"]

@@ -62,13 +62,3 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     if isinstance(df.schema["ts"].dataType, LongType):
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view for the SQL API."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -2,16 +2,15 @@
 
 The reference's AWS stage fan-out (README.md:14-33) is batch, but its
 shape — rows arriving as keyed messages, per-row docs emitted — maps
-to Structured Streaming: file/queue source → the same declarative
-transformations → sink via foreachBatch. Everything here reuses the
-batch expressions; only the source/sink wiring differs, which is the
-point of building the batch plans declaratively.
+to Structured Streaming: a file source → the same declarative
+transformations → a sink. Everything here reuses the batch
+expressions; only the source/sink wiring differs, which is the point
+of building the batch plans declaratively.
 
-Local testing uses the file source + memory sink with
+The streaming queries use the file source + memory sink with
 ``processAllAvailable()`` so a bounded parquet directory drives the
-stream to completion synchronously. At scale the same code points at
-a Kafka source and a transactional ``foreachBatch`` sink; watermarks
-bound state for late data.
+stream to completion synchronously; watermarks bound state for late
+data.
 """
 
 from __future__ import annotations
@@ -88,33 +87,6 @@ def run_stream_to_memory(
     return agg.sparkSession.table(query_name)
 
 
-def streaming_dedup(docs_stream: DataFrame, text_col: str = "text") -> DataFrame:
-    """In-flight exact dedup: fingerprint each arriving document and
-    dropDuplicates on the digest. State holds one 16-byte digest per
-    distinct document ever seen (bounded with a watermark column at
-    scale); duplicates never reach the sink."""
-    from pipeline_usnvc_spark.functions.text import doc_fingerprint
-
-    return docs_stream.withColumn("fp", doc_fingerprint(text_col)).dropDuplicates(["fp"])
-
-
-def stream_documents_foreach_batch(
-    docs_builder, out_dir: str, spark: SparkSession, source_stream: DataFrame
-):
-    """Streaming doc emission: each micro-batch runs the same batch
-    assembly and appends envelopes — the scalable stand-in for the
-    reference's per-row stage-2 worker (usnvc.py:68-81)."""
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        # overwrite, not append: each epoch owns its directory, so a
-        # replayed micro-batch (at-least-once foreachBatch) converges
-        # to the same files instead of duplicating every envelope —
-        # same contract as idempotent_foreach_batch below
-        docs_builder(batch_df).write.mode("overwrite").json(f"{out_dir}/epoch={epoch_id}")
-
-    return source_stream.writeStream.foreachBatch(_sink).trigger(availableNow=True)
-
-
 def streaming_dedup_within_watermark(
     events: DataFrame, key_cols: list[str], watermark: str = "1 hour"
 ) -> DataFrame:
@@ -122,294 +94,14 @@ def streaming_dedup_within_watermark(
     are dropped while it stays inside the event-time watermark, and
     the key's state is evicted once the watermark passes it.
 
-    This is the 100 TB form of ``streaming_dedup``: plain
-    dropDuplicates holds every key ever seen (state grows with the
-    corpus); dropDuplicatesWithinWatermark holds only the tail of the
-    stream, which is the right contract when duplicates arrive close
-    together (retries, at-least-once sources, replayed batches).
+    Plain dropDuplicates would hold every key ever seen (state grows
+    with the corpus); dropDuplicatesWithinWatermark holds only the
+    tail of the stream, which is the right contract when duplicates
+    arrive close together (retries, at-least-once sources, replayed
+    batches).
     Requires an event-time column already named ``ts``.
     """
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(key_cols)
-
-
-def stream_stream_attribution_join(
-    events: DataFrame, window: str = "30 minutes", watermark: str = "1 hour"
-) -> DataFrame:
-    """Stream-stream interval join: each purchase attributed to every
-    click by the same user within the preceding ``window``.
-
-    Both sides carry a watermark and the join has a bounded time
-    range, so the state store holds only ``window + watermark`` of
-    each stream — the canonical Structured Streaming attribution
-    shape. State eviction: a buffered click can stop matching once
-    the purchase-side watermark passes click_ts + window.
-    """
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("amount"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {window}")),
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        "click_ts",
-        "purchase_ts",
-        "amount",
-    )
-
-
-def stream_static_enrich(
-    events: DataFrame, users: DataFrame, value_threshold: float | None = None
-) -> DataFrame:
-    """Stream-static join: enrich the event stream with a static
-    dimension (broadcast — the static side is planned per micro-batch
-    as an ordinary batch join, so the dimension broadcast is free and
-    no state store is involved). The standard shape for decorating a
-    100 TB/day event firehose with slowly-changing reference data;
-    the static side re-reads its source each batch, picking up
-    appended files without restart."""
-    # No filter by default: an enrichment join must not silently drop
-    # zero/negative/NULL-valued events; the threshold is opt-in.
-    filtered = (
-        events if value_threshold is None else events.filter(F.col("value") > value_threshold)
-    )
-    return (
-        filtered.join(F.broadcast(users), "user_id")
-        .select("event_id", "user_id", "event_type", "value", "segment")
-    )
-
-
-def idempotent_foreach_batch(out_dir: str):
-    """An exactly-once-under-retries foreachBatch file sink.
-
-    Structured Streaming guarantees at-least-once foreachBatch
-    invocation: after a failure the SAME epoch re-runs, so a naive
-    ``mode("append")`` duplicates every row of the retried batch. The
-    standard fix is batch-id-keyed idempotent writes: each epoch
-    OVERWRITES its own ``epoch=N`` directory, so a replay converges to
-    the same files instead of doubling them (the pattern Delta/Iceberg
-    implement with txn ids; plain parquet gets it from per-epoch
-    overwrite semantics). Returns the sink fn for ``foreachBatch``.
-    """
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
-
-    return _sink
-
-
-def incremental_dedup_ledger(out_dir: str, text_col: str = "text"):
-    """Cross-batch exact dedup against an all-time fingerprint ledger.
-
-    The production ingestion shape: every microbatch of newly crawled
-    documents is deduplicated (a) within the batch (min-id keeper per
-    normalized fingerprint) and (b) against EVERYTHING already
-    accepted, then appended. Returns a ``foreachBatch`` sink writing
-
-    - ``{out}/docs/epoch=N``   — first-seen documents of epoch N
-    - ``{out}/ledger/epoch=N`` — their (fp) rows
-
-    Idempotent under Structured Streaming's at-least-once foreachBatch
-    contract: each epoch overwrites its OWN partition, and the
-    anti-join reads only ledger epochs STRICTLY BELOW the current one
-    — a retried epoch therefore cannot see its own half-written
-    output and converges to identical files.
-
-    100 TB shape: the ledger holds 16-byte digests, not text (~1/1000
-    of corpus bytes); the anti-join is fp-keyed — bucket both sides by
-    fp (operators/layout) to make it shuffle-free as the ledger grows.
-    """
-    from pipeline_usnvc_spark.functions.text import doc_fingerprint
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("fp").orderBy("doc_id")
-        batch = (
-            batch_df.withColumn("fp", doc_fingerprint(text_col))
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        from pyspark.errors import AnalysisException
-
-        try:
-            ledger = spark.read.parquet(f"{out_dir}/ledger")
-        except AnalysisException as e:
-            # ONLY the first-epoch missing-path case may fall back —
-            # an unreadable or wrongly-shaped ledger must fail loudly,
-            # not silently re-admit every historical duplicate.
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
-            ledger = None
-        if ledger is None:
-            fresh = batch  # no ledger yet: everything is first-seen
-        else:
-            # Idempotency relies on epoch_ids increasing monotonically
-            # across the ledger's lifetime. Restarting the stream with
-            # a FRESH checkpoint resets epochs to 0; the strict
-            # `epoch < epoch_id` filter would then exclude the whole
-            # existing ledger and silently re-admit every historical
-            # duplicate. Fail loudly instead (ADVICE r02): resume with
-            # the original checkpoint, or point at a new out_dir.
-            if epoch_id == 0:
-                max_epoch = ledger.agg(F.max("epoch")).first()[0]
-                # A ledger holding ONLY epoch 0 is the legitimate
-                # at-least-once replay of the first microbatch (same
-                # checkpoint, driver died before commit) — the strict
-                # `epoch < epoch_id` filter makes that converge. Only
-                # epochs BEYOND 0 prove a fresh-checkpoint reset.
-                if max_epoch is not None and max_epoch > epoch_id:
-                    raise RuntimeError(
-                        f"incremental_dedup_ledger: epoch 0 arrived but "
-                        f"{out_dir}/ledger already holds epochs up to "
-                        f"{max_epoch} — the stream was restarted with a "
-                        f"fresh checkpoint, which would silently re-admit "
-                        f"every historical duplicate. Reuse the original "
-                        f"checkpoint dir or start a new ledger dir."
-                    )
-            fresh = batch.join(
-                ledger.filter(F.col("epoch") < F.lit(epoch_id)).select("fp"),
-                "fp",
-                "left_anti",
-            )
-        fresh = fresh.localCheckpoint()  # both writes below reuse one pass
-        fresh.drop("fp").write.mode("overwrite").parquet(
-            f"{out_dir}/docs/epoch={epoch_id}"
-        )
-        fresh.select("fp").write.mode("overwrite").parquet(
-            f"{out_dir}/ledger/epoch={epoch_id}"
-        )
-
-    return _sink
-
-
-def streaming_psi_monitor(
-    events: DataFrame,
-    reference: DataFrame,
-    n_bins: int = 10,
-):
-    """Streaming drift monitor: Population Stability Index of the
-    arriving value distribution against a STATIC reference histogram
-    (the q190 statistic, incrementalized).
-
-    Structured Streaming allows ONE stateful aggregation per query, so
-    the split is: the STREAM maintains the per-(type, bin) histogram
-    (map-side binning + incremental state merge per microbatch — the
-    only part that scales with data); the returned ``finish`` callable
-    turns any snapshot of that histogram into the per-bin PSI report
-    as a tiny batch computation (joins against the frozen reference
-    proportions, broadcast). Same smoothed per-bin contract as q190,
-    so the batch query is the drained stream's correctness oracle
-    (asserted in tests/test_streaming.py).
-
-    Returns (cur_counts_stream, finish).
-    """
-    bounds = reference.agg(
-        F.min("value").alias("mn"), F.max("value").alias("mx")
-    ).first()
-    if bounds["mn"] is None or bounds["mx"] is None:
-        raise ValueError(
-            "streaming_psi_monitor: reference has no non-null values — "
-            "a drift monitor against an empty baseline is meaningless"
-        )
-    mn, mx = float(bounds["mn"]), float(bounds["mx"])
-    span = mx - mn
-    if span <= 0.0:
-        raise ValueError(
-            f"streaming_psi_monitor: reference values are constant ({mn}) — "
-            "fixed-width bins need a non-degenerate range; choose a wider "
-            "reference window"
-        )
-
-    def binned(df: DataFrame) -> DataFrame:
-        # Clamp BOTH ends: live values can drift outside the frozen
-        # reference range, and an unclamped floor would fragment
-        # below-range mass into unbounded negative bin ids (scoring
-        # downward drift differently from upward).
-        return df.withColumn(
-            "bin",
-            F.greatest(
-                F.least(
-                    F.floor(
-                        ((F.col("value") - F.lit(mn)) / F.lit(span)) * F.lit(float(n_bins))
-                    ),
-                    F.lit(n_bins - 1).cast("bigint"),
-                ),
-                F.lit(0).cast("bigint"),
-            ).cast("int"),
-        )
-
-    ref_counts = (
-        binned(reference)
-        .groupBy("event_type", "bin")
-        .agg(F.count("*").alias("c_ref"))
-    )
-    ref_totals = ref_counts.groupBy("event_type").agg(F.sum("c_ref").alias("n_ref"))
-
-    cur_counts_stream = (
-        binned(events)
-        .groupBy("event_type", "bin")
-        .agg(F.count("*").alias("c_cur"))
-    )
-
-    smooth = F.lit(0.5) * F.lit(float(n_bins))
-
-    def finish(cur_counts: DataFrame) -> DataFrame:
-        cur_totals = cur_counts.groupBy("event_type").agg(
-            F.sum("c_cur").alias("n_cur")
-        )
-        # Totals join FULL and coalesce to 0: an event_type present in
-        # only one side (vanished from the stream, or brand-new) is
-        # the strongest drift signal — inner joins would silently
-        # drop exactly those rows from the report.
-        totals = (
-            ref_totals.join(cur_totals, "event_type", "full")
-            .withColumn("n_ref", F.coalesce("n_ref", F.lit(0)))
-            .withColumn("n_cur", F.coalesce("n_cur", F.lit(0)))
-        )
-        joined = (
-            cur_counts.join(F.broadcast(ref_counts), ["event_type", "bin"], "full")
-            .withColumn("c_ref", F.coalesce("c_ref", F.lit(0)))
-            .withColumn("c_cur", F.coalesce("c_cur", F.lit(0)))
-            .join(F.broadcast(totals), "event_type")
-        )
-        p_ref = (F.col("c_ref").cast("double") + F.lit(0.5)) / (
-            F.col("n_ref").cast("double") + smooth
-        )
-        p_cur = (F.col("c_cur").cast("double") + F.lit(0.5)) / (
-            F.col("n_cur").cast("double") + smooth
-        )
-        return joined.select(
-            "event_type",
-            "bin",
-            F.col("c_ref").cast("bigint").alias("c_ref"),
-            F.col("c_cur").cast("bigint").alias("c_cur"),
-            F.round((p_cur - p_ref) * F.log(p_cur / p_ref), 6).alias("psi_term"),
-        )
-
-    return cur_counts_stream, finish
 
 
 def stream_stream_left_outer_join(
@@ -421,13 +113,12 @@ def stream_stream_left_outer_join(
     once the watermark passes ``click_ts + window`` and the state
     store can prove no match can ever arrive.
 
-    The outer side is exactly the inner join (q-level
-    stream_stream_attribution_join) plus watermark-certified
-    non-matches: Structured Streaming buffers an unmatched click until
-    the global watermark (min across inputs of max event time − delay)
-    exceeds its join-window end, then emits it null-extended in a
-    no-data micro-batch. State is bounded by window + watermark on
-    both sides, same as the inner form.
+    The outer side is exactly the inner interval join plus
+    watermark-certified non-matches: Structured Streaming buffers an
+    unmatched click until the global watermark (min across inputs of
+    max event time − delay) exceeds its join-window end, then emits it
+    null-extended in a no-data micro-batch. State is bounded by
+    window + watermark on both sides.
     """
     clicks = (
         events.filter(F.col("event_type") == "click")

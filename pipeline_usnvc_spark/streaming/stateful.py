@@ -130,97 +130,6 @@ def streaming_term_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4): the successor stateful API —
-# typed per-key state handles (ValueState/ListState/MapState), timer
-# support, and built-in state TTL, vs applyInPandasWithState's single
-# untyped tuple. Running per-user spend statistics, the
-# fraud/quota-tracking shape: one small ValueState row per user.
-# ---------------------------------------------------------------------------
-USER_STATS_OUTPUT_SCHEMA = (
-    "user_id bigint, n_events bigint, total_cents bigint, max_cents bigint"
-)
-
-
-def _make_user_stats_processor():
-    """Factory (imported lazily so batch-only sessions never touch the
-    streaming API): a StatefulProcessor maintaining per-user running
-    (count, sum, max) over integer cents — exact arithmetic, no float
-    accumulation drift across batches."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningUserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # ValueState is the typed replacement for the state tuple;
-            # a production deployment passes ttlDurationMs here to
-            # auto-expire idle users (bounded state without manual
-            # timers).
-            self._stats = handle.getValueState(
-                "stats", "n bigint, total_cents bigint, max_cents bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
-
-            if self._stats.exists():
-                n, total, mx = tuple(self._stats.get())
-            else:
-                n, total, mx = 0, 0, None
-            for pdf in rows:
-                # Spark's F.round is HALF_UP (away from zero); pandas
-                # .round() is banker's half-to-even — replicate Spark
-                # so the running stats equal the batch oracle exactly.
-                # NULL/NaN values are dropped BEFORE the cast: numpy's
-                # NaN.astype(int64) silently yields INT64_MIN, which
-                # would permanently corrupt the running totals (batch
-                # F.sum/F.max skip nulls).
-                v = pdf["value"].to_numpy() * 100.0
-                v = v[np.isfinite(v)]
-                cents = (np.sign(v) * np.floor(np.abs(v) + 0.5)).astype("int64")
-                n += int(len(cents))
-                total += int(cents.sum())
-                if len(cents):
-                    batch_mx = int(cents.max())
-                    # mx seeds from the DATA, not 0: an all-negative
-                    # (refund-only) user must report the true negative
-                    # maximum, as batch F.max does
-                    mx = batch_mx if mx is None else max(mx, batch_mx)
-            self._stats.update((n, total, mx))
-            (user_id,) = key
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "total_cents": [total],
-                    "max_cents": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return RunningUserStats()
-
-
-def streaming_user_stats(events: DataFrame) -> DataFrame:
-    """events stream → running per-user spend stats via
-    ``transformWithStateInPandas`` (update mode; the latest emission
-    per user is the running value). Requires the RocksDB state store
-    (set by the caller/test) — the provider transformWithState is
-    built on."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_make_user_stats_processor(),
-        outputStructType=USER_STATS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-# ---------------------------------------------------------------------------
 # Streaming near-duplicate detection: a persistent MinHash-LSH band
 # index maintained as keyed state. Incoming documents hash to band
 # signatures MAP-SIDE (operators/dedup.band_signatures_mapside — zero

@@ -3,32 +3,16 @@
 The reference logs one change event per row per stage through a
 harness callback (usnvc.py:24-28, 55-57, 74-77) and sends each
 document through a draft-07-validated sink (README.md:35-45). The
-Spark equivalents: per-change-type accumulators (cheap cluster-wide
-counters; ``write_documents`` feeds ``documents_written``) in place of
-the per-row event log, and a final-select validation with a
-quarantine channel instead of a per-row schema validator.
+Spark equivalents: the write's own ``Observation`` counts (rows,
+rejects, ``documents_written``) in place of the per-row event log, and
+a final-select validation with a quarantine channel instead of a
+per-row schema validator.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-
-
-class ChangeLedger:
-    """Named counters backed by Spark accumulators."""
-
-    def __init__(self, spark: SparkSession):
-        self._spark = spark
-        self._counters: dict[str, object] = {}
-
-    def counter(self, name: str):
-        if name not in self._counters:
-            self._counters[name] = self._spark.sparkContext.accumulator(0)
-        return self._counters[name]
-
-    def counts(self) -> dict[str, int]:
-        return {k: v.value for k, v in self._counters.items()}
 
 
 def _envelope_line():
@@ -51,7 +35,6 @@ def write_documents(
     docs: DataFrame,
     out_dir: str,
     quarantine_dir: str | None = None,
-    ledger: ChangeLedger | None = None,
 ) -> dict[str, int]:
     """Validated envelope sink: ``{"source_data": <doc>, "row_id": <id>}``
     one JSON object per line. Rows failing the envelope contract
@@ -64,8 +47,8 @@ def write_documents(
     The document plan runs once. An ``Observation`` on the valid-line
     write collects, during that same action, the row count
     ``n_docs``, ``n_null_ids``, the rejected count ``n_rejected`` and
-    ``payload_bytes``; they are returned, and the ledger's
-    ``documents_written`` counter gets the valid rows. The quarantine
+    ``payload_bytes``; they are returned with ``documents_written``,
+    the valid rows written (``n_docs - n_rejected``). The quarantine
     write reads ``docs`` again only when a row was rejected; otherwise
     it writes ``docs.limit(0)``, which Catalyst folds to an empty
     relation, so no source is scanned and the directory still holds an
@@ -84,8 +67,7 @@ def write_documents(
     # sum() over zero rows is NULL: an empty (but successful) write
     # must report zeros, not raise int(None)
     metrics = {k: int(v or 0) for k, v in obs.get.items()}
-    if ledger is not None:
-        ledger.counter("documents_written").add(metrics["n_docs"] - metrics["n_rejected"])
+    metrics["documents_written"] = metrics["n_docs"] - metrics["n_rejected"]
     if quarantine_dir is not None:
         rejected = docs.filter(~ok) if metrics["n_rejected"] else docs.limit(0)
         rejected.select(

@@ -23,7 +23,7 @@ sys.path.insert(0, str(REPO / "tests"))
 def main() -> None:
     from pyspark.sql import SparkSession
 
-    from oracle_compare import assert_frames_match, run_oracle
+    from replay_full import check
 
     n_slots = int(sys.argv[1]) if len(sys.argv) > 1 else 50
     spark = SparkSession.builder.master("local[8]").getOrCreate()
@@ -38,20 +38,14 @@ def main() -> None:
     t0 = time.time()
     ok_o = ok_r = bad = 0
     for name in sample:
-        try:
-            if name in oracles:
-                assert_frames_match(
-                    qs[name](spark, sf).toPandas(),
-                    run_oracle(oracles[name], sf),
-                    name,
-                )
-                ok_o += 1
-            else:
-                assert qs[name](spark, sf).count() >= 0
-                ok_r += 1
-        except Exception as ex:  # noqa: BLE001 — report and continue
+        err = check(spark, sf, name, qs[name], oracles.get(name))
+        if err is not None:
             bad += 1
-            print(f"FAIL {name}: {str(ex)[:400]}", flush=True)
+            print(f"FAIL {name}: {err[:400]}", flush=True)
+        elif name in oracles:
+            ok_o += 1
+        else:
+            ok_r += 1
     print(
         f"DRY RUN {n_slots}-slot sample: {ok_o} oracle green + {ok_r} "
         f"rows-only clean / {bad} failed in {time.time() - t0:.0f}s"

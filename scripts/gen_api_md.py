@@ -21,7 +21,6 @@ MODS = [
     "pipeline_usnvc_spark.operators.rank",
     "pipeline_usnvc_spark.operators.graph",
     "pipeline_usnvc_spark.operators.skew",
-    "pipeline_usnvc_spark.operators.layout",
     "pipeline_usnvc_spark.operators.rangejoin",
     "pipeline_usnvc_spark.operators.skyline",
     "pipeline_usnvc_spark.operators.bpe",
@@ -32,9 +31,6 @@ MODS = [
     "pipeline_usnvc_spark.streaming.ivm",
     "pipeline_usnvc_spark.sources.tables",
     "pipeline_usnvc_spark.sources.delimited",
-    "pipeline_usnvc_spark.sources.jsonl",
-    "pipeline_usnvc_spark.sources.kafka",
-    "pipeline_usnvc_spark.sources.corpus_source",
     "pipeline_usnvc_spark.usnvc.ingest",
     "pipeline_usnvc_spark.usnvc.docs",
     "pipeline_usnvc_spark.usnvc.ledger",

@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Adversarial-scale USNVC hierarchy stress (VERDICT r10 item 7).
 
-The real export is 8 levels deep with ~8.5k units; the 50k-unit demo
-(usnvc_scale_demo.py) widens but keeps the 8-ary shallow shape. This
-stress goes DEEP and WIDE at once — a D-level F-ary tree (defaults:
+The real export is 8 levels deep with ~8.5k units; the perfbench
+generator (perfbench/gen.usnvc_export) widens but keeps the 8-level
+shape. This stress goes DEEP and WIDE at once — a D-level F-ary tree (defaults:
 depth 12, fan-out 3 -> 265,720 units) with one adversarial hot
 parent carrying an extra 5,000 direct children (the child-nest
 skew case) — and ASSERTS the hierarchy family's scale

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-from pipeline_usnvc_spark.sources.delimited import read_delimited
+from pipeline_usnvc_spark.sources.delimited import delimited_reader
 
 SCHEMA = T.StructType(
     [
@@ -28,7 +28,7 @@ def test_malformed_rows_become_nulls_not_failures(spark, tmp_path):
         "d\t4\tfine\n",
         encoding="ISO-8859-1",
     )
-    df = read_delimited(spark, str(p), SCHEMA)
+    df = delimited_reader(spark).schema(SCHEMA).csv(str(p))
     rows = {r["id"]: r for r in df.collect()}
     assert set(rows) == {"a", "b", "c", "d"}
     assert rows["b"]["n"] is None and rows["b"]["note"] == "still here"
@@ -44,61 +44,12 @@ def test_quoted_multiline_and_latin1(spark, tmp_path):
         "b\t2\tM\xfcller caf\xe9\n",
         encoding="ISO-8859-1",
     )
-    df = read_delimited(spark, str(p), SCHEMA, multiline=True)
+    df = delimited_reader(spark, multiline=True).schema(SCHEMA).csv(str(p))
     rows = {r["id"]: r for r in df.collect()}
     assert rows["a"]["note"] == "line one\nline two"
     assert rows["b"]["note"] == "Müller café"
     # without multiline the same file mis-splits the quoted row —
     # documents why rich-text tables opt in
-    df2 = read_delimited(spark, str(p), SCHEMA, multiline=False)
+    df2 = delimited_reader(spark, multiline=False).schema(SCHEMA).csv(str(p))
     rows2 = {r["id"]: r for r in df2.collect() if r["id"] in rows}
     assert rows2["a"]["note"] != "line one\nline two"
-
-
-def test_jsonl_corrupt_lines_quarantine(spark, tmp_path):
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from pipeline_usnvc_spark.sources.jsonl import read_jsonl
-
-    p = tmp_path / "docs.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "alpha"}\n'
-        '{"doc_id": 2, "text": "beta"}\n'
-        '{"doc_id": 3, "text": "gamma", TRUNCATED\n'
-        "not json at all\n"
-        '{"doc_id": 4, "text": "delta"}\n'
-    )
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
-    )
-    good, quarantine = read_jsonl(spark, str(p), schema)
-    assert sorted(r.doc_id for r in good.collect()) == [1, 2, 4]
-    bad = [r.raw_line for r in quarantine.collect()]
-    assert len(bad) == 2
-    assert any("TRUNCATED" in b for b in bad)
-    assert any("not json" in b for b in bad)
-
-
-def test_jsonl_all_good_lines(spark, tmp_path):
-    from pipeline_usnvc_spark.sources.jsonl import read_jsonl
-
-    p = tmp_path / "clean.jsonl"
-    p.write_text('{"a": 1}\n{"a": 2}\n')
-    good, quarantine = read_jsonl(spark, str(p))
-    assert good.count() == 2
-    assert quarantine.count() == 0
-
-
-def test_parquet_schema_evolution_merges(spark, tmp_path):
-    from pipeline_usnvc_spark.sources.jsonl import read_parquet_evolved
-
-    old = tmp_path / "v1"
-    new = tmp_path / "v2"
-    spark.createDataFrame([(1, "a")], "id long, text string").write.parquet(str(old))
-    spark.createDataFrame(
-        [(2, "b", "en")], "id long, text string, lang string"
-    ).write.parquet(str(new))
-    df = read_parquet_evolved(spark, str(old), str(new))
-    assert set(df.columns) == {"id", "text", "lang"}
-    rows = {r.id: r.lang for r in df.collect()}
-    assert rows[1] is None and rows[2] == "en"

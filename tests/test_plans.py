@@ -977,10 +977,8 @@ _PKG_BROADCAST_ALLOWLIST: dict[str, set[str]] = {
     "timeseries.py": {"bounds"},  # scalar min/max aggregate
     "skyline.py": {"carry"},  # #partitions-row carry frame
     "rank.py": {"offsets"},  # #partitions-row offsets table
-    "layout.py": {"total"},  # scalar aggregate
     "joins.py": {"dim"},  # decode_dimension contract: bounded code dims only
     "similarity.py": {"q", "q_tables"},  # query-grain eval frames (documented)
-    "pipeline.py": {"users", "ref_counts", "totals"},  # reference dim / bin lattice / event_type grain
 }
 
 

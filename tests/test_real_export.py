@@ -36,7 +36,7 @@ EXPECTED_ROWS = {
 
 @pytest.mark.skipif(not EXPORT_DIR.exists(), reason="real export not available")
 def test_real_export_headers_and_counts(spark):
-    from pipeline_usnvc_spark.sources.delimited import read_delimited
+    from pipeline_usnvc_spark.sources.delimited import delimited_reader
     from pipeline_usnvc_spark.usnvc.schemas import EXPORT_SCHEMAS
 
     spark.conf.set("spark.sql.caseSensitive", "true")
@@ -45,7 +45,7 @@ def test_real_export_headers_and_counts(spark):
         header = path.read_text(encoding="ISO-8859-1").split("\n", 1)[0].split("\t")
         schema = EXPORT_SCHEMAS[name]
         assert header == [f.name for f in schema.fields], name
-        df = read_delimited(spark, str(path), schema)
+        df = delimited_reader(spark).schema(schema).csv(str(path))
         assert df.count() == expected, name
         # key column parses non-null on every row
         key = schema.fields[0].name

@@ -472,39 +472,12 @@ def test_curate_exercises_every_stage(spark):
     assert len(out) == len(rows)
 
 
-def test_grouped_topk_equals_plain_window(spark):
-    """Two-stage salted top-k == single-window top-k on a skewed
-    fixture (one group holds 90% of rows)."""
-    import random
-
-    from pyspark.sql import Window
-    from pipeline_usnvc_spark.operators.rank import grouped_topk
-
-    rng = random.Random(11)
-    rows = [("hot", rng.randint(0, 10**9), i) for i in range(9000)] + [
-        (f"g{i%7}", rng.randint(0, 10**9), 9000 + i) for i in range(1000)
-    ]
-    df = spark.createDataFrame(rows, "g string, v bigint, id bigint")
-    got = {
-        (r["g"], r["id"], r["rank"])
-        for r in grouped_topk(df, "g", ["v", "id"], k=25).collect()
-    }
-    w = Window.partitionBy("g").orderBy("v", "id")
-    want = {
-        (r["g"], r["id"], r["rank"])
-        for r in df.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 25)
-        .collect()
-    }
-    assert got == want and len(got) == 25 + 7 * 25
-
-
 def test_quota_window_prunes_map_side(spark, sf_dir):
     """q165's row_number()<=k window must be rewritten by Spark into
     WindowGroupLimit with a PARTIAL stage BEFORE the exchange — each
     map task pre-prunes to its local top-k per source, so a hot
-    source shuffles at most k rows per task (the built-in version of
-    the salted two-stage in operators/rank.grouped_topk)."""
+    source shuffles at most k rows per task (a salted two-stage top-k
+    done by the planner)."""
     from pipeline_usnvc_spark.plans import QUERIES
 
     df = QUERIES["q165_source_quota_cap"](spark, sf_dir)

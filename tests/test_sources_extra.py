@@ -1,64 +1,10 @@
-"""Source/format widening: the custom Python DataSource (Spark 4
-``pyspark.sql.datasource`` API), ORC roundtrip, and the binaryFile
-source feeding the multimodal plumbing."""
+"""Source/format widening: ORC roundtrip, the binaryFile source
+feeding the multimodal plumbing, and the USNVC sink and integrity
+guards."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
-
-
-def _make_corpus(tmp_path, texts):
-    d = tmp_path / "corpus"
-    (d / "sub").mkdir(parents=True)
-    paths = []
-    for i, txt in enumerate(texts):
-        p = (d / "sub" / f"doc{i}.txt") if i % 2 else (d / f"doc{i}.txt")
-        p.write_text(txt)
-        paths.append(str(p))
-    (d / "ignored.bin").write_text("x")
-    return str(d)
-
-
-def test_textcorpus_datasource_reads_tree(spark, tmp_path):
-    from pipeline_usnvc_spark.sources.corpus_source import TextCorpusDataSource
-
-    spark.dataSource.register(TextCorpusDataSource)
-    d = _make_corpus(tmp_path, ["hello world", "foo bar baz", "third doc here"])
-    df = (
-        spark.read.format("textcorpus")
-        .option("path", d)
-        .option("partitions", "2")
-        .load()
-    )
-    rows = sorted(df.collect(), key=lambda r: r["doc_id"])
-    assert [r["doc_id"] for r in rows] == [0, 1, 2]
-    assert all(r["n_chars"] == len(r["text"]) for r in rows)
-    # stable ids: sorted-path order, independent of partition count
-    df1 = (
-        spark.read.format("textcorpus")
-        .option("path", d)
-        .option("partitions", "1")
-        .load()
-    )
-    assert {(r["doc_id"], r["path"]) for r in df1.collect()} == {
-        (r["doc_id"], r["path"]) for r in rows
-    }
-    # composes with the engine: fingerprints computable straight off it
-    from pipeline_usnvc_spark.functions.text import doc_fingerprint
-
-    assert df.select(doc_fingerprint("text")).distinct().count() == 3
-
-
-def test_textcorpus_requires_path(spark):
-    from pipeline_usnvc_spark.sources.corpus_source import TextCorpusDataSource
-
-    spark.dataSource.register(TextCorpusDataSource)
-    import pytest
-
-    with pytest.raises(Exception, match="path"):
-        spark.read.format("textcorpus").load().collect()
 
 
 def test_orc_roundtrip_preserves_documents(spark, sf_dir, tmp_path):
@@ -119,83 +65,20 @@ def test_binaryfile_source_feeds_multimodal(spark, tmp_path):
         assert rows[name]["feature_kind"] == "stub_byte_histogram"
 
 
-def test_textcorpus_streaming_tails_directory(spark, tmp_path):
-    """Spark 4 SimpleDataSourceStreamReader: files dropped into the
-    tree between microbatches arrive exactly once, with the same
-    sorted-order doc_ids the batch reader assigns."""
-    from pipeline_usnvc_spark.sources.corpus_source import TextCorpusDataSource
-
-    spark.dataSource.register(TextCorpusDataSource)
-    d = tmp_path / "tail"
-    d.mkdir()
-    (d / "a.txt").write_text("first doc")
-    (d / "b.txt").write_text("second doc")
-
-    stream = spark.readStream.format("textcorpus").option("path", str(d)).load()
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("corpus_tail")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got1 = {r["path"]: r["doc_id"] for r in spark.table("corpus_tail").collect()}
-        assert got1 == {str(d / "a.txt"): 0, str(d / "b.txt"): 1}
-
-        # drop a new file AFTER the tail: next batch emits only it
-        (d / "c.txt").write_text("third doc arrives later")
-        q.processAllAvailable()
-        rows = spark.table("corpus_tail").collect()
-        assert len(rows) == 3  # a and b are NOT re-emitted
-        got2 = {r["path"]: (r["doc_id"], r["n_chars"]) for r in rows}
-        assert got2[str(d / "c.txt")] == (2, len("third doc arrives later"))
-
-        # OUT-OF-ORDER arrival: a name sorting BEFORE every processed
-        # file must still emit exactly once (positional offsets would
-        # re-emit c.txt and skip this one forever)
-        (d / "0early.txt").write_text("late arrival, early name")
-        q.processAllAvailable()
-        rows = spark.table("corpus_tail").collect()
-        assert len(rows) == 4
-        got3 = {r["path"]: r["doc_id"] for r in rows}
-        assert got3[str(d / "0early.txt")] == 3  # next id, no renumbering
-        assert sorted(got3.values()) == [0, 1, 2, 3]  # nothing re-emitted
-    finally:
-        q.stop()
-
-
 def test_round10_source_guards(spark, tmp_path):
     """Regression batch for the round-10 sources/usnvc review:
 
-    1. decode_kafka_envelope fails FAST on payload fields that would
-       collide with its reserved metadata/corrupt columns (previously
-       produced a duplicate-name frame that broke every downstream
-       reference).
-    2. the observed sink (write_documents) applies its `ok` contract: a
+    1. the observed sink (write_documents) applies its `ok` contract: a
        null row_id previously serialized to the invalid JSON line
        '{"source_data": ..., }' and a null source_data wrote a blank
        line; both are now dropped while the metrics still count them.
-    3. build_documents fails loudly on a dangling parent_id instead
+    2. build_documents fails loudly on a dangling parent_id instead
        of shipping a document whose ancestors claim the root while
        its parent points at a missing unit (test_dangling_parent_fails_loudly).
     """
     import json
 
-    import pytest
-
-    from pipeline_usnvc_spark.sources.kafka import decode_kafka_envelope
     from pipeline_usnvc_spark.usnvc.ledger import write_documents
-
-    raw = spark.createDataFrame(
-        [(b"{}", "t", 0, 0, None)],
-        "value binary, topic string, partition int, offset long, timestamp timestamp",
-    )
-    with pytest.raises(ValueError, match="kafka_topic"):
-        decode_kafka_envelope(raw, "event_id bigint, kafka_topic string")
-    with pytest.raises(ValueError, match="_corrupt_record"):
-        decode_kafka_envelope(raw, "event_id bigint, _corrupt_record string")
 
     docs = spark.createDataFrame(
         [('{"id": 1}', "a"), (None, "b"), ('{"id": 3}', None)],

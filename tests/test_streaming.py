@@ -40,60 +40,6 @@ def test_stateful_sessionize_matches_batch(spark, sf_dir):
     assert len(got) > 0
 
 
-def test_streaming_dedup_drops_duplicates(spark, sf_dir):
-    from pipeline_usnvc_spark.streaming.pipeline import run_stream_to_memory, streaming_dedup
-
-    schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
-    out = run_stream_to_memory(
-        streaming_dedup(stream), "stream_dedup", output_mode="append"
-    )
-    n_stream = out.count()
-    # batch ground truth: distinct fingerprints
-    from pipeline_usnvc_spark.functions.text import doc_fingerprint
-    from pipeline_usnvc_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    n_batch = docs.select(doc_fingerprint("text").alias("fp")).distinct().count()
-    assert n_stream == n_batch
-
-
-def test_foreach_batch_doc_emission(spark, sf_dir, tmp_path):
-    import json
-
-    from pipeline_usnvc_spark.streaming.pipeline import (
-        read_event_stream,
-        stream_documents_foreach_batch,
-    )
-
-    def builder(batch_df):
-        return batch_df.groupBy("user_id").agg(F.count("*").alias("n")).select(
-            F.col("user_id").cast("string").alias("row_id"),
-            F.to_json(F.struct("user_id", "n")).alias("source_data"),
-        )
-
-    out = tmp_path / "stream_docs"
-    q = stream_documents_foreach_batch(
-        builder, str(out), spark, read_event_stream(spark, sf_dir)
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    files = list(out.rglob("part-*.json")) + list(out.rglob("part-*"))
-    lines = []
-    for p in files:
-        if p.is_file() and "crc" not in p.name:
-            lines += [l for l in p.read_text().splitlines() if l]
-    docs = [json.loads(l) for l in lines]
-    assert docs and all(set(d) == {"row_id", "source_data"} for d in docs)
-
-
 def test_ivm_stream_equals_batch_recompute(spark, sf_dir):
     """The q82 contract run directly: incremental upserts across
     micro-batches produce exactly the batch argmax state."""
@@ -170,46 +116,6 @@ def test_dedup_within_watermark_matches_batch_distinct(spark, sf_dir):
     assert out.count() == n_batch
 
 
-def test_stream_stream_join_matches_batch(spark, sf_dir):
-    """Stream-stream interval join (watermarked both sides) == the
-    same join run as a batch query on the bounded input."""
-    from pyspark.sql import functions as F
-
-    from pipeline_usnvc_spark.sources.tables import load_table
-    from pipeline_usnvc_spark.streaming.pipeline import (
-        read_event_stream,
-        run_stream_to_memory,
-        stream_stream_attribution_join,
-    )
-
-    stream = read_event_stream(spark, sf_dir)
-    got = run_stream_to_memory(
-        stream_stream_attribution_join(stream), "ss_join", output_mode="append"
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    expected = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 minutes")),
-    )
-    exp = {(r["click_id"], r["purchase_id"]) for r in expected.collect()}
-    act = {(r["click_id"], r["purchase_id"]) for r in got.collect()}
-    assert act == exp
-    assert len(act) > 0
-
-
 def test_streaming_session_window_matches_batch(spark, sf_dir):
     """Native session_window in a streaming aggregation (with
     watermark) emits the same closed sessions as the batch q103 —
@@ -255,171 +161,6 @@ def test_streaming_session_window_matches_batch(spark, sf_dir):
     assert len(got) > 0
 
 
-def test_stream_static_join_matches_batch(spark, sf_dir):
-    """Stream-static broadcast enrichment == the same join as batch;
-    no watermark/state needed (static side planned per micro-batch)."""
-    from pyspark.sql import functions as F
-
-    from pipeline_usnvc_spark.sources.tables import load_table
-    from pipeline_usnvc_spark.streaming.pipeline import (
-        read_event_stream,
-        run_stream_to_memory,
-        stream_static_enrich,
-    )
-
-    ev_batch = load_table(spark, sf_dir, "events")
-    users = (
-        ev_batch.select("user_id")
-        .distinct()
-        .withColumn(
-            "segment",
-            F.when(F.col("user_id") % 3 == 0, "a").otherwise("b"),
-        )
-    )
-
-    stream = read_event_stream(spark, sf_dir)
-    got = run_stream_to_memory(
-        stream_static_enrich(stream, users, value_threshold=50.0),
-        "ss_enrich",
-        output_mode="append",
-    )
-    expected = stream_static_enrich(ev_batch, users, value_threshold=50.0)
-    exp = {(r["event_id"], r["segment"]) for r in expected.collect()}
-    act = {(r["event_id"], r["segment"]) for r in got.collect()}
-    assert act == exp
-    assert len(act) > 0
-
-
-def test_foreach_batch_retry_is_idempotent(spark, tmp_path):
-    # Simulate Structured Streaming's at-least-once foreachBatch
-    # contract: the same epoch delivered twice (retry after failure)
-    # must not duplicate rows in the sink.
-    from pipeline_usnvc_spark.streaming.pipeline import idempotent_foreach_batch
-
-    out = str(tmp_path / "sink")
-    sink = idempotent_foreach_batch(out)
-    batch = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    sink(batch, 0)
-    sink(batch, 0)  # retry of epoch 0
-    sink(spark.createDataFrame([(3, "c")], "id long, v string"), 1)
-    got = sorted(r.id for r in spark.read.parquet(f"{out}/epoch=0", f"{out}/epoch=1").collect())
-    assert got == [1, 2, 3], got
-
-
-def test_kafka_options_resolution():
-    # Config surface only — no broker in this sandbox (ROADMAP item).
-    import pytest
-
-    from pipeline_usnvc_spark.sources.kafka import resolve_kafka_options
-
-    opts = resolve_kafka_options(
-        "broker1:9092,broker2:9092",
-        topic="events",
-        starting_offsets="latest",
-        max_offsets_per_trigger=1_000_000,
-        extra_options={"kafka.security.protocol": "SASL_SSL"},
-    )
-    assert opts == {
-        "kafka.bootstrap.servers": "broker1:9092,broker2:9092",
-        "subscribe": "events",
-        "startingOffsets": "latest",
-        "failOnDataLoss": "false",
-        "maxOffsetsPerTrigger": "1000000",
-        "kafka.security.protocol": "SASL_SSL",
-    }
-    # JSON offset maps pass validation; junk does not
-    resolve_kafka_options("b:9092", topic="t", starting_offsets='{"t":{"0":42}}')
-    with pytest.raises(ValueError, match="starting_offsets"):
-        resolve_kafka_options("b:9092", topic="t", starting_offsets="yesterday")
-    # subscription modes are mutually exclusive and mandatory
-    with pytest.raises(ValueError, match="exactly one"):
-        resolve_kafka_options("b:9092", topic="t", topic_pattern="t.*")
-    with pytest.raises(ValueError, match="exactly one"):
-        resolve_kafka_options("b:9092")
-    with pytest.raises(ValueError, match="collides"):
-        resolve_kafka_options("b:9092", topic="t", extra_options={"subscribe": "x"})
-
-
-def test_kafka_envelope_decode(spark):
-    # The decode path is pure column expressions over the documented
-    # Kafka wire schema — testable on a batch frame; the live stream
-    # shares the exact same expressions.
-    import datetime
-
-    from pipeline_usnvc_spark.sources.kafka import (
-        KAFKA_WIRE_SCHEMA,
-        decode_kafka_envelope,
-    )
-
-    ts = datetime.datetime(2026, 1, 1, 0, 0, 0)
-    rows = [
-        (None, b'{"event_id": 1, "user_id": 7, "value": 2.5}', "events", 0, 100, ts, 0),
-        (None, b"NOT JSON", "events", 0, 101, ts, 0),
-        (None, None, "events", 1, 102, ts, 0),  # tombstone
-    ]
-    raw = spark.createDataFrame(rows, KAFKA_WIRE_SCHEMA)
-    out = decode_kafka_envelope(
-        raw, "event_id bigint, user_id bigint, value double"
-    ).orderBy("kafka_offset")
-    got = out.collect()
-    assert [r["event_id"] for r in got] == [1, None, None]
-    assert [r["_corrupt"] for r in got] == [False, True, False]
-    assert [r["kafka_offset"] for r in got] == [100, 101, 102]
-    assert got[0]["value"] == 2.5 and got[0]["user_id"] == 7
-    # a payload field named "topic" must not collide with the
-    # prefixed kafka metadata columns
-    collide = decode_kafka_envelope(raw, "topic string, event_id bigint")
-    assert collide.columns.count("topic") == 1
-    assert "kafka_topic" in collide.columns
-    collide.select("topic", "kafka_topic").collect()  # unambiguous
-
-
-def test_incremental_dedup_ledger(spark, tmp_path):
-    """Cross-batch exact dedup: later epochs drop docs whose
-    fingerprint any earlier epoch accepted; a retried epoch converges
-    to identical output (at-least-once safety)."""
-    from pipeline_usnvc_spark.streaming.pipeline import incremental_dedup_ledger
-
-    out = str(tmp_path / "led")
-    sink = incremental_dedup_ledger(out)
-    mk = lambda rows: spark.createDataFrame(rows, "doc_id: long, text: string")
-
-    sink(mk([(1, "alpha beta gamma"), (2, "delta epsilon zeta"),
-             (3, "alpha  BETA gamma")]), 0)  # 3 normalizes to fp of 1
-    docs0 = spark.read.parquet(f"{out}/docs/epoch=0")
-    assert sorted(r["doc_id"] for r in docs0.collect()) == [1, 2]
-
-    sink(mk([(4, "delta epsilon zeta"), (5, "eta theta iota")]), 1)
-    docs1 = spark.read.parquet(f"{out}/docs/epoch=1")
-    assert [r["doc_id"] for r in docs1.collect()] == [5]  # 4 dups epoch 0
-
-    # retry epoch 1 (same batch re-delivered): output unchanged, no dup rows
-    sink(mk([(4, "delta epsilon zeta"), (5, "eta theta iota")]), 1)
-    docs1b = spark.read.parquet(f"{out}/docs/epoch=1")
-    assert [r["doc_id"] for r in docs1b.collect()] == [5]
-    ledger = spark.read.parquet(f"{out}/ledger")
-    assert ledger.count() == 3  # one fp row per accepted doc
-    assert ledger.select("fp").distinct().count() == 3
-
-    # A fresh-checkpoint restart resets epochs to 0; with historical
-    # ledger epochs present, the strict `epoch < epoch_id` filter
-    # would silently re-admit every past duplicate — the sink must
-    # fail loudly instead (ADVICE r02).
-    with pytest.raises(RuntimeError, match="fresh checkpoint"):
-        sink(mk([(6, "kappa lambda mu")]), 0)
-
-    # ...but a GENUINE epoch-0 replay (ledger holds ONLY epoch 0 —
-    # the driver died before the first checkpoint commit) must
-    # converge, not wedge: same-checkpoint at-least-once is the
-    # contract the per-epoch overwrite exists for.
-    out2 = str(tmp_path / "led2")
-    sink2 = incremental_dedup_ledger(out2)
-    sink2(mk([(1, "alpha beta gamma"), (2, "delta epsilon zeta")]), 0)
-    sink2(mk([(1, "alpha beta gamma"), (2, "delta epsilon zeta")]), 0)  # replay
-    docs0b = spark.read.parquet(f"{out2}/docs/epoch=0")
-    assert sorted(r["doc_id"] for r in docs0b.collect()) == [1, 2]
-
-
 def test_streaming_term_counts_match_batch(spark, sf_dir):
     """Running stateful term totals after draining the stream equal a
     batch groupBy count over the same corpus."""
@@ -454,123 +195,6 @@ def test_streaming_term_counts_match_batch(spark, sf_dir):
     assert final == want
     # deltas within one drained run sum to the totals
     assert sum(r["batch_delta"] for r in emitted) == sum(want.values())
-
-
-def test_transform_with_state_user_stats_match_batch(spark, sf_dir):
-    """Spark 4 transformWithStateInPandas: running per-user stats after
-    draining the stream equal the batch groupBy over the same events.
-    State arithmetic is integer cents, so equality is exact.
-
-    Container boundary: the transformWithState state protocol speaks
-    protobuf (pyspark/sql/streaming/proto/StateMessage_pb2) and this
-    container has no google.protobuf — the operator is implemented
-    and the API path exercised up to the worker handshake, but the
-    end-to-end run needs protobuf (skip mirrors the Kafka/Avro
-    deferrals in ROADMAP.md)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state protocol requires protobuf (absent here)",
-    )
-    from pipeline_usnvc_spark.streaming.pipeline import (
-        read_event_stream,
-        run_stream_to_memory,
-    )
-    from pipeline_usnvc_spark.streaming.stateful import streaming_user_stats
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        emitted = run_stream_to_memory(
-            streaming_user_stats(read_event_stream(spark, sf_dir)),
-            "user_stats_tws",
-            output_mode="update",
-        ).collect()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    final = {}
-    for r in emitted:  # update mode: last emission per user wins
-        final[r["user_id"]] = (r["n_events"], r["total_cents"], r["max_cents"])
-
-    batch = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("user_id", F.round(F.col("value") * 100).cast("long").alias("cents"))
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("cents").alias("total"),
-            F.max("cents").alias("mx"),
-        )
-    )
-    want = {r["user_id"]: (r["n"], r["total"], r["mx"]) for r in batch.collect()}
-    assert final == want
-
-
-def test_streaming_psi_matches_batch(spark, sf_dir):
-    """The drained streaming histogram, finished into the PSI report,
-    equals the same statistic computed fully in batch over identical
-    reference/current slices."""
-    from pipeline_usnvc_spark.sources.tables import load_table
-    from pipeline_usnvc_spark.streaming.pipeline import (
-        read_event_stream,
-        run_stream_to_memory,
-        streaming_psi_monitor,
-    )
-
-    reference = load_table(spark, sf_dir, "events").filter(
-        F.col("ts") < F.lit("2024-01-16").cast("timestamp")
-    )
-    stream = read_event_stream(spark, sf_dir).filter(
-        F.col("ts") >= F.lit("2024-01-16").cast("timestamp")
-    )
-    cur_counts_stream, finish = streaming_psi_monitor(stream, reference)
-    snapshot = run_stream_to_memory(
-        cur_counts_stream, "psi_hist", output_mode="complete"
-    )
-    got = {
-        (r["event_type"], r["bin"]): (r["c_ref"], r["c_cur"], r["psi_term"])
-        for r in finish(snapshot).collect()
-    }
-
-    # batch ground truth: identical computation on the batch frames
-    current = load_table(spark, sf_dir, "events").filter(
-        F.col("ts") >= F.lit("2024-01-16").cast("timestamp")
-    )
-    _, batch_finish = streaming_psi_monitor(current, reference)
-    cur_counts_batch = streaming_psi_monitor(current, reference)[0]
-    want = {
-        (r["event_type"], r["bin"]): (r["c_ref"], r["c_cur"], r["psi_term"])
-        for r in batch_finish(cur_counts_batch).collect()
-    }
-    assert got == want
-    assert len(got) > 0
-
-
-def test_streaming_psi_clamps_and_keeps_one_sided_types(spark):
-    """Below-reference-range values clamp into bin 0 (no negative
-    bins), and event types present in only one side stay in the
-    report — vanished/new types are the strongest drift signal."""
-    from pipeline_usnvc_spark.streaming.pipeline import streaming_psi_monitor
-
-    ref = spark.createDataFrame(
-        [("a", 10.0), ("a", 20.0), ("gone", 15.0)], "event_type string, value double"
-    )
-    cur = spark.createDataFrame(
-        [("a", -50.0), ("a", 3.0), ("new", 12.0)], "event_type string, value double"
-    )
-    cur_counts, finish = streaming_psi_monitor(cur, ref)
-    rows = finish(cur_counts).collect()
-    assert all(r["bin"] >= 0 for r in rows), rows
-    types = {r["event_type"] for r in rows}
-    assert "gone" in types and "new" in types
-    # the below-range mass landed in bin 0
-    a0 = [r for r in rows if r["event_type"] == "a" and r["bin"] == 0]
-    assert a0 and a0[0]["c_cur"] == 2
 
 
 def test_rocksdb_state_store_backend(spark, sf_dir, tmp_path):
@@ -855,14 +479,13 @@ def test_q337_outer_join_audit_clean_and_fires(spark, sf_dir, monkeypatch):
 
     import pipeline_usnvc_spark.streaming.pipeline as sp
 
+    outer = sp.stream_stream_left_outer_join
     monkeypatch.setattr(
         sp,
         "stream_stream_left_outer_join",
-        lambda ev, window="30 minutes", watermark="1 hour": sp.stream_stream_attribution_join(
+        lambda ev, window="30 minutes", watermark="1 hour": outer(
             ev, window, watermark
-        ).select(
-            "user_id", "click_id", "click_ts", "purchase_id", "purchase_ts"
-        ),
+        ).filter("purchase_id IS NOT NULL"),
     )
     import pytest as _pytest
 

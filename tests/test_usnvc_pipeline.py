@@ -218,19 +218,18 @@ def test_observed_write_metrics(spark, export_dir, tmp_path, docs_by_id):
 def test_sink_roundtrip(spark, export_dir, tmp_path, docs_by_id):
     from pipeline_usnvc_spark.usnvc.ingest import build_silver, read_export
     from pipeline_usnvc_spark.usnvc.docs import build_documents
-    from pipeline_usnvc_spark.usnvc.ledger import ChangeLedger, write_documents
+    from pipeline_usnvc_spark.usnvc.ledger import write_documents
 
     docs = build_documents(build_silver(read_export(spark, export_dir)), "2026-01-01T00:00:00")
     out = tmp_path / "out"
-    ledger = ChangeLedger(spark)
-    write_documents(docs, str(out), quarantine_dir=str(tmp_path / "bad"), ledger=ledger)
+    metrics = write_documents(docs, str(out), quarantine_dir=str(tmp_path / "bad"))
     lines = []
     for p in out.glob("part-*"):
         lines += [l for l in p.read_text().splitlines() if l]
     assert len(lines) == len(UNIT_IDS) + 1
     parsed = [json.loads(l) for l in lines]
     assert all(set(p) == {"source_data", "row_id"} for p in parsed)
-    assert ledger.counts()["documents_written"] == len(UNIT_IDS) + 1
+    assert metrics["documents_written"] == len(UNIT_IDS) + 1
 
 
 def _part_lines(d) -> list[str]:
@@ -238,7 +237,7 @@ def _part_lines(d) -> list[str]:
 
 
 def test_sink_quarantines_exactly_the_rejects(spark, tmp_path):
-    from pipeline_usnvc_spark.usnvc.ledger import ChangeLedger, write_documents
+    from pipeline_usnvc_spark.usnvc.ledger import write_documents
 
     docs = spark.createDataFrame(
         [
@@ -250,13 +249,12 @@ def test_sink_quarantines_exactly_the_rejects(spark, tmp_path):
         ],
         "source_data string, row_id string",
     )
-    ledger = ChangeLedger(spark)
-    metrics = write_documents(docs, str(tmp_path / "out"), str(tmp_path / "bad"), ledger)
+    metrics = write_documents(docs, str(tmp_path / "out"), str(tmp_path / "bad"))
     valid = [json.loads(ln) for ln in _part_lines(tmp_path / "out")]
     assert sorted((v["row_id"], v["source_data"]["id"]) for v in valid) == [("a", 1), ('e"\\', 5)]
     bad = sorted((r["row_id"], r["source_data"]) for r in map(json.loads, _part_lines(tmp_path / "bad")))
     assert bad == [("<null>", '{"id": 2}'), ("c", ""), ("d", "")]
-    assert ledger.counts()["documents_written"] == 2
+    assert metrics["documents_written"] == 2
     assert metrics["n_docs"] == 5 and metrics["n_null_ids"] == 1
 
 
@@ -294,6 +292,35 @@ def test_sink_runs_the_document_plan_once(spark, tmp_path):
     write_documents(docs, str(tmp_path / "out"), str(tmp_path / "bad"))
     assert len(_part_lines(tmp_path / "out")) == 40
     assert seen.value == 40
+
+
+def test_cli_writes_what_the_library_writes(spark, export_dir, tmp_path):
+    """``python -m pipeline_usnvc_spark`` (the drop-in for the
+    reference's process_1/process_2) writes the same document lines as
+    write_documents(build_documents(...)) at the same run timestamp,
+    and ``--limit N`` stops after N documents."""
+    from pipeline_usnvc_spark.__main__ import main
+    from pipeline_usnvc_spark.usnvc.docs import build_documents
+    from pipeline_usnvc_spark.usnvc.ingest import build_silver, read_export
+    from pipeline_usnvc_spark.usnvc.ledger import write_documents
+
+    ts = "2026-01-01T00:00:00"
+    common = ["--export-dir", export_dir, "--run-timestamp", ts, "--master", spark.sparkContext.master]
+    # main() builds its session through get_spark, which resets the
+    # shared test session's shuffle partitions: restore them after.
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        assert main(common + ["--out", str(tmp_path / "cli"), "--quarantine", str(tmp_path / "cli_bad")]) == 0
+        assert main(common + ["--out", str(tmp_path / "cli3"), "--limit", "3"]) == 0
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+
+    docs = build_documents(build_silver(read_export(spark, export_dir)), ts)
+    write_documents(docs, str(tmp_path / "lib"), str(tmp_path / "lib_bad"))
+    cli = sorted(_part_lines(tmp_path / "cli"))
+    assert len(cli) == len(UNIT_IDS) + 1
+    assert cli == sorted(_part_lines(tmp_path / "lib"))
+    assert len(_part_lines(tmp_path / "cli3")) == 3
 
 
 # ---------------------------------------------------------------------------
